@@ -13,13 +13,23 @@ Hive installation; ``hive.py`` holds the real-HMS path
 Partition-predicate pushdown happens HERE — partitions that fail the filter
 are never listed into the read (step 3 of the reference flow), independent
 of (and before) Spark's own file-level pruning.
+
+Listing a read is one driver-side walk plus one driver-side Spark listing:
+the walk descends only through ``key=value`` directories and stops at
+partition depth, so it lists the non-leaf directories and never opens a
+leaf; the filter string is parsed once per call. Spark then lists the files
+of the kept directories on the driver (``session.DEFAULT_CONFS`` raises
+``parallelPartitionDiscovery.threshold``), so planning a ``"scan"`` read
+launches no Spark job however many partitions it keeps.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import os
 import re
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 from urllib.parse import unquote
 
@@ -41,6 +51,38 @@ class TableDef:
     input_format: str = "parquet"            # 'parquet' | 'text'
     partition_keys: list[tuple[str, str]] = field(default_factory=list)
     serde_params: dict[str, str] = field(default_factory=dict)
+
+
+def _walk_partition_dirs(location: str, depth: int) -> Iterator[tuple[str, ...]]:
+    """Directory-name paths exactly ``depth`` levels below ``location`` whose
+    every component is a ``key=value`` directory, in ``os.walk`` top-down
+    order. Only the non-leaf ``key=value`` directories are listed: a leaf
+    partition directory is never opened, and anything without ``=`` (a
+    ``_temporary`` or ``.spark-staging`` dir, a stray dir, a data file) is
+    never descended into. Symlinked directories are skipped, as ``os.walk``
+    does not descend into them."""
+
+    def is_partition_dir(entry: os.DirEntry) -> bool:
+        try:
+            return "=" in entry.name and entry.is_dir(follow_symlinks=False)
+        except OSError:
+            return False
+
+    def walk(path: str, comps: tuple[str, ...]) -> Iterator[tuple[str, ...]]:
+        try:
+            with os.scandir(path) as it:
+                names = [e.name for e in it if is_partition_dir(e)]
+        except OSError:
+            return
+        for n in names:
+            if len(comps) + 1 == depth:
+                yield comps + (n,)
+            else:
+                yield from walk(os.path.join(path, n), comps + (n,))
+
+    if depth == 0:
+        return iter([()] if os.path.isdir(location) else [])
+    return walk(location, ())
 
 
 class ThinCatalog:
@@ -92,16 +134,12 @@ class ThinCatalog:
         point at a directory that does not exist (r7 review)."""
         t = self.get_table(name)
         keys = [k for k, _ in t.partition_keys]
+        keep = _compile_filter(filter_expr) if filter_expr else None
         parts: list[tuple[dict[str, str], str]] = []
-        for dirpath, dirnames, _files in os.walk(t.location):
-            rel = os.path.relpath(dirpath, t.location)
-            comps = [] if rel == "." else rel.split(os.sep)
-            if len(comps) == len(keys) and all("=" in c for c in comps):
-                vals = {c.split("=", 1)[0]: unquote(c.split("=", 1)[1]) for c in comps}
-                parts.append((vals, rel))
-                dirnames.clear()
-        if filter_expr:
-            parts = [(p, rel) for p, rel in parts if _eval_filter(filter_expr, p)]
+        for comps in _walk_partition_dirs(t.location, len(keys)):
+            vals = {k: unquote(v) for k, v in (c.split("=", 1) for c in comps)}
+            if keep is None or keep(vals):
+                parts.append((vals, os.sep.join(comps) or "."))
         return sorted(parts, key=lambda pr: [pr[0][k] for k in keys])
 
     # -- read (reference steps 1-5) ----------------------------------------
@@ -117,7 +155,7 @@ class ThinCatalog:
         attached. One call = the whole reference flow.
 
         Two physical strategies behind identical semantics (same
-        ``_eval_filter`` pruning, same output schema):
+        ``_compile_filter`` pruning, same output schema):
 
         - ``"scan"`` (default for parquet): ONE multi-path scan of the
           surviving partition directories with ``basePath`` set, so Spark
@@ -131,7 +169,11 @@ class ThinCatalog:
           and for text tables.
 
         Pruned-before-read either way: directories failing the filter are
-        never passed to the reader.
+        never passed to the reader. Listing is one driver-side walk of the
+        non-leaf ``key=value`` directories plus one driver-side Spark
+        listing of the kept directories, so planning a ``"scan"`` read
+        launches no Spark job. When no partition passes the filter the
+        result is empty with the same schema, ``columns`` applied.
         """
         t = self.get_table(name)
         if not t.partition_keys:
@@ -144,10 +186,9 @@ class ThinCatalog:
         parts = [p for p, _rel in part_dirs]
         locs = [os.path.join(t.location, rel) for _p, rel in part_dirs]
         if not parts:
-            empty_schema = hive_schema_to_struct(t.columns + t.partition_keys)
-            return spark.createDataFrame([], empty_schema)
-
-        if strategy == "scan":
+            out = spark.createDataFrame(
+                [], hive_schema_to_struct(t.columns + t.partition_keys))
+        elif strategy == "scan":
             if t.input_format != "parquet":
                 raise ValueError("strategy='scan' requires a parquet table")
             # the DECLARED schema (data + partition columns) is passed to
@@ -212,35 +253,62 @@ def _restore_quoted(s: str, literals: list[str]) -> str:
     return re.sub(r"\x00(\d+)\x00", lambda m: literals[int(m.group(1))], s)
 
 
-def _eval_filter(expr: str, pvals: dict[str, str]) -> bool:
-    """Evaluate a simple metastore-style filter string (``k='v' AND ...``,
-    OR supported, AND binds tighter) against one partition's key values.
-    Comparisons are numeric when both sides parse as numbers, else string.
-    Quoted literals are tokenized first, so AND/OR inside a quoted value
-    never mis-splits."""
+_OPS: dict[str, Callable[[object, object], bool]] = {
+    "=": operator.eq, "!=": operator.ne, "<>": operator.ne,
+    "<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+}
+
+
+def _as_number(s: str) -> float | None:
+    """``s`` as a float, or None when it is not a number or is NaN (NaN
+    never equals itself, so a ``'nan'`` value could never be selected)."""
+    try:
+        x = float(s)
+    except ValueError:
+        return None
+    return None if x != x else x
+
+
+def _compile_clause(clause: str) -> Callable[[dict[str, str]], bool]:
+    m = _CMP.match(clause)
+    if not m:
+        def unparseable(_pvals: dict[str, str]) -> bool:
+            raise ValueError(f"cannot parse partition filter clause {clause!r}")
+        return unparseable
+    key, op, *vals = m.groups()
+    rhs = next(v for v in vals if v is not None)
+    rhs_num, cmp = _as_number(rhs), _OPS[op]
+
+    def test(pvals: dict[str, str]) -> bool:
+        if key not in pvals:
+            raise KeyError(f"{key!r} is not a partition key")
+        lhs = pvals[key]
+        lhs_num = _as_number(lhs) if rhs_num is not None else None
+        if lhs_num is None:
+            return cmp(lhs, rhs)
+        return cmp(lhs_num, rhs_num)
+
+    return test
+
+
+def _compile_filter(expr: str) -> Callable[[dict[str, str]], bool]:
+    """Parse a simple metastore-style filter string (``k='v' AND ...``, OR
+    supported, AND binds tighter) once into a predicate over one
+    partition's key values. Comparisons are numeric when both sides parse
+    as non-NaN numbers, else string. Quoted literals are tokenized first,
+    so AND/OR inside a quoted value never mis-splits. A clause is checked
+    only when evaluation reaches it, so an unknown key or a malformed
+    clause raises exactly when the per-partition evaluation touches it."""
     protected, literals = _protect_quoted(expr)
-    for or_term in re.split(r"\s+OR\s+", protected, flags=re.I):
-        ok = True
-        for clause in re.split(r"\s+AND\s+", or_term, flags=re.I):
-            m = _CMP.match(_restore_quoted(clause, literals))
-            if not m:
-                raise ValueError(f"cannot parse partition filter clause {clause!r}")
-            key, op, *vals = m.groups()
-            if key not in pvals:
-                raise KeyError(f"{key!r} is not a partition key")
-            rhs = next(v for v in vals if v is not None)
-            lhs = pvals[key]
-            try:
-                lhs_c, rhs_c = float(lhs), float(rhs)
-            except ValueError:
-                lhs_c, rhs_c = lhs, rhs
-            ok = ok and {
-                "=": lhs_c == rhs_c, "!=": lhs_c != rhs_c, "<>": lhs_c != rhs_c,
-                "<": lhs_c < rhs_c, "<=": lhs_c <= rhs_c,
-                ">": lhs_c > rhs_c, ">=": lhs_c >= rhs_c,
-            }[op]
-            if not ok:
-                break
-        if ok:
-            return True
-    return False
+    terms = [
+        [_compile_clause(_restore_quoted(c, literals))
+         for c in re.split(r"\s+AND\s+", or_term, flags=re.I)]
+        for or_term in re.split(r"\s+OR\s+", protected, flags=re.I)
+    ]
+    return lambda pvals: any(all(c(pvals) for c in term) for term in terms)
+
+
+def _eval_filter(expr: str, pvals: dict[str, str]) -> bool:
+    """Evaluate a filter string against one partition's key values (see
+    :func:`_compile_filter`)."""
+    return _compile_filter(expr)(pvals)

@@ -116,6 +116,13 @@ def test_partition_filter_eval():
     assert _eval_filter("n > 9", {"n": "10"})  # numeric, not lexicographic
     with pytest.raises(KeyError):
         _eval_filter("nope = 1", {"a": "1"})
+    # 'nan' parses as float NaN, which never equals itself: such values
+    # compare as strings, so a 'nan' partition can be selected
+    assert _eval_filter("k = 'nan'", {"k": "nan"})
+    assert not _eval_filter("k != 'nan'", {"k": "nan"})
+    assert _eval_filter("k <> nan", {"k": "1"})
+    assert not _eval_filter("k = 'nan'", {"k": "NaN"})
+    assert _eval_filter("k = 1", {"k": "1.0"})  # non-NaN numbers stay numeric
 
 
 def test_csv_sink_roundtrip(spark, tmp_table_dir):
@@ -557,3 +564,213 @@ def test_read_delimited_hive_serde_ragged_and_dirty(spark, tmp_path):
     ).collect()
     got = {(r.a, r.b, r.c) for r in rows}
     assert got == {(1, "x", 2.5), (2, None, None), (None, "y", None)}, got
+
+
+# -- partition walk vs a naive os.walk reference -----------------------------
+
+_WALK_KEYS = ["y", "m", "d"]
+
+
+def _naive_partition_dirs(location, keys, keep):
+    """The plain ``os.walk`` enumeration: every directory exactly
+    ``len(keys)`` levels down whose components all contain ``=``."""
+    from urllib.parse import unquote
+
+    parts = []
+    for dirpath, dirnames, _files in os.walk(location):
+        rel = os.path.relpath(dirpath, location)
+        comps = [] if rel == "." else rel.split(os.sep)
+        if len(comps) == len(keys) and all("=" in c for c in comps):
+            vals = {c.split("=", 1)[0]: unquote(c.split("=", 1)[1]) for c in comps}
+            parts.append((vals, rel))
+            dirnames.clear()
+    parts = [(p, rel) for p, rel in parts if keep(p)]
+    return sorted(parts, key=lambda pr: [pr[0][k] for k in keys])
+
+
+def _naive_compare(lhs, op, rhs):
+    import math
+
+    def num(s):
+        try:
+            x = float(s)
+        except ValueError:
+            return None
+        return None if math.isnan(x) else x
+
+    a, b = num(lhs), num(rhs)
+    if a is None or b is None:
+        a, b = lhs, rhs
+    return {"=": a == b, "!=": a != b, "<>": a != b, "<": a < b,
+            "<=": a <= b, ">": a > b, ">=": a >= b}[op]
+
+
+def _random_filter(rng, values):
+    """A random OR-of-ANDs filter as (text, structure): quoted and bare
+    literals, mixed-case connectives and every comparison operator."""
+    terms = []
+    for _ in range(rng.randint(1, 3)):
+        terms.append([
+            (k, rng.choice(["=", "!=", "<>", "<", "<=", ">", ">="]),
+             rng.choice(values[k] + ["0", "5", "zzz", "nan", "2023.0"]))
+            for k in (rng.choice(_WALK_KEYS) for _ in range(rng.randint(1, 3)))
+        ])
+
+    def literal(v):
+        quotes = ["'", '"'] if " " in v else ["'", '"', ""]
+        q = rng.choice(quotes)
+        return f"{q}{v}{q}"
+
+    text = rng.choice([" OR ", " or ", "  OR "]).join(
+        rng.choice([" AND ", " and ", "  AND "]).join(
+            f"{k}{rng.choice(['', ' '])}{op} {literal(v)}" for k, op, v in term)
+        for term in terms
+    )
+    return text, terms
+
+
+def _build_walk_layout(root):
+    """A 3-level ``y=/m=/d=`` table with every layout hazard the walk must
+    skip or keep; returns the leaf directories that hold data, by
+    relative path, mapped to the row id written there."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    leaves = [
+        "y=2023/m=01/d=1", "y=2023/m=01/d=02", "y=2023/m=01/d=nan",
+        "y=2023/m=01/d=x y", "y=2023/m=1/d=1", "y=2023/m=1/d=a:b",
+        "y=2023/m=1/d=a%3Ab", "y=2023/m=1/d=rock or jazz",
+        "y=2023/m=12/d=31", "y=2023/m=12/d=1", "y=2024/m=02/d=1",
+        "y=2024/m=02/d=%25", "y=2024/m=02/d=-3.5", "y=2024/m=02/d=1e3",
+        "y=2024/m=2/d=10",
+    ]
+    ignored = [
+        "_temporary/0/y=2023/m=1/d=9",       # Spark's commit dir
+        ".spark-staging-7/y=2023/m=1/d=9",   # dynamic-overwrite staging
+        "stray/y=2023/m=1/d=9",              # top-level dir without '='
+        "y=2023/stray/m=1/d=9",              # stray at an intermediate level
+        "y=2024/.spark-staging-7/m=1/d=9",
+        "y=2023/m=7",                        # partition dir too shallow
+    ]
+    ids = {}
+    for i, rel in enumerate(leaves + ignored):
+        os.makedirs(os.path.join(root, rel))
+        pq.write_table(pa.table({"id": pa.array([i], pa.int64())}),
+                       os.path.join(root, rel, "part-0.parquet"))
+        if rel in leaves:
+            ids[rel] = i
+    # too deep: an empty key=value dir below a real leaf
+    os.makedirs(os.path.join(root, "y=2023/m=12/d=31/e=deep"))
+    # data files at intermediate levels, one named like a partition dir
+    pq.write_table(pa.table({"id": pa.array([99], pa.int64())}),
+                   os.path.join(root, "y=2023/part-0.parquet"))
+    open(os.path.join(root, "y=2023/m=01/d=3"), "w").close()
+    open(os.path.join(root, "_SUCCESS"), "w").close()
+    # symlinked partition dirs, leaf and intermediate: os.walk skips both
+    os.symlink(os.path.join(root, "y=2023/m=1/d=1"),
+               os.path.join(root, "y=2024/m=02/d=lnk"))
+    os.symlink(os.path.join(root, "y=2023/m=1"), os.path.join(root, "y=2024/m=5"))
+    os.symlink(os.path.join(root, "y=2024"), os.path.join(root, "y=2025"))
+    return ids
+
+
+def test_partition_walk_matches_naive_os_walk(spark, tmp_path):
+    """The leaf-free partition walk and the parse-once filter must return
+    what a plain ``os.walk`` over the table returns — same partitions, same
+    order, same raw directories handed to the reader — over seeded random
+    filters on a layout full of directories the walk must skip."""
+    import random
+    from urllib.parse import unquote, urlparse
+
+    from dask_hivemetastore_spark.sources.metastore import TableDef, ThinCatalog
+
+    loc = str(tmp_path / "walk")
+    ids = _build_walk_layout(loc)
+    cat = ThinCatalog()
+    cat.register(TableDef(name="w", location=loc, columns=[("id", "bigint")],
+                          partition_keys=[(k, "string") for k in _WALK_KEYS]))
+
+    everything = _naive_partition_dirs(loc, _WALK_KEYS, lambda p: True)
+    assert sorted(rel for _v, rel in everything) == sorted(ids)
+    assert cat.list_partitions("w") == [v for v, _rel in everything]
+    values = {k: sorted({v[k] for v, _rel in everything}) for k in _WALK_KEYS}
+
+    def read_dirs(expr):
+        df = cat.read_table(spark, "w", partition_filter=expr)
+        return sorted(os.path.relpath(os.path.dirname(unquote(urlparse(f).path)), loc)
+                      for f in df.inputFiles())
+
+    rng = random.Random(20240)
+    for i in range(150):
+        expr, terms = _random_filter(rng, values)
+        ref = _naive_partition_dirs(
+            loc, _WALK_KEYS,
+            lambda p: any(all(_naive_compare(p[k], op, v) for k, op, v in t)
+                          for t in terms))
+        assert cat.list_partitions("w", expr) == [v for v, _rel in ref], expr
+        if i % 5 == 0:
+            assert read_dirs(expr) == sorted(rel for _v, rel in ref), expr
+
+    # the rows read back are the rows written to the kept leaves
+    want = sorted((ids[rel], v["y"], v["m"], v["d"]) for v, rel in everything)
+    for strategy in ("scan", "union"):
+        got = sorted(map(tuple, cat.read_table(spark, "w", strategy=strategy).collect()))
+        assert got == want, strategy
+
+
+def test_thin_catalog_scan_planning_launches_no_jobs(spark, tmp_path):
+    """Planning a multi-path read above Spark's default parallel-listing
+    threshold (32 paths) must list on the driver: no Spark job may start
+    inside ``read_table``. Pins the session conf that keeps
+    InMemoryFileIndex from launching one listing task per partition."""
+    from dask_hivemetastore_spark.sources.metastore import TableDef, ThinCatalog
+
+    nparts = 40
+    base = str(tmp_path / "forty")
+    spark.range(nparts).selectExpr("id", "id AS pk").write.partitionBy("pk").parquet(base)
+    cat = ThinCatalog()
+    cat.register(TableDef(name="forty", location=base, columns=[("id", "bigint")],
+                          partition_keys=[("pk", "int")]))
+    flt = "pk >= 2"
+    assert len(cat.list_partitions("forty", flt)) > 32
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    before = set(tracker.getJobIdsForGroup(group))
+    scan = cat.read_table(spark, "forty", partition_filter=flt, strategy="scan")
+    after = set(tracker.getJobIdsForGroup(group))
+    assert after == before, sorted(after - before)
+
+    union = cat.read_table(spark, "forty", partition_filter=flt, strategy="union")
+    rows = sorted(map(tuple, scan.collect()))
+    assert rows == sorted(map(tuple, union.collect()))
+    assert rows == [(i, i) for i in range(2, nparts)]
+
+
+def test_thin_catalog_empty_read_applies_columns(spark, tmp_path):
+    """A read that keeps no partition returns the same projected schema as
+    one that keeps some."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dask_hivemetastore_spark.sources.metastore import TableDef, ThinCatalog
+
+    loc = str(tmp_path / "t")
+    os.makedirs(os.path.join(loc, "k=a"))
+    pq.write_table(pa.table({"id": pa.array([1], pa.int64()), "v": [1.5]}),
+                   os.path.join(loc, "k=a", "part-0.parquet"))
+    cat = ThinCatalog()
+    cat.register(TableDef(name="t", location=loc,
+                          columns=[("id", "bigint"), ("v", "double")],
+                          partition_keys=[("k", "string")]))
+    cols = ["k", "id"]
+    for strategy in ("scan", "union"):
+        some = cat.read_table(spark, "t", columns=cols, partition_filter="k = 'a'",
+                              strategy=strategy)
+        none = cat.read_table(spark, "t", columns=cols, partition_filter="k = 'b'",
+                              strategy=strategy)
+        assert [(f.name, f.dataType) for f in none.schema.fields] == [
+            (f.name, f.dataType) for f in some.schema.fields
+        ], strategy
+        assert none.collect() == [] and [tuple(r) for r in some.collect()] == [("a", 1)]
