@@ -26,7 +26,8 @@ from __future__ import annotations
 
 import json
 import math
-import os
+from contextlib import contextmanager
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -511,6 +512,14 @@ def _quantized_store_exists(spark, index_path: str) -> bool:
         return False
 
 
+def _has_int8_store(spark, manifest: dict | None, index_path: str) -> bool:
+    """Whether the LSH index carries its INT8 sidecar store: the
+    manifest says; a manifest-less index is looked at."""
+    if manifest is not None:
+        return manifest.get("quantized", False)
+    return _quantized_store_exists(spark, index_path)
+
+
 def _write_lsh_quantized(emb: DataFrame, index_path: str, *, dim: int,
                          id_col: str, vec_col: str, qbatch: str,
                          mode: str) -> None:
@@ -574,16 +583,26 @@ def lsh_build_index(emb: DataFrame, index_path: str, *, dim: int,
       the exact float rescore of the ~45% candidate fraction dominating
       probe wall time on adversarial corpora — the screen is where that
       cost goes."""
-    _lsh_postings(emb, dim=dim, bits=bits, n_tables=n_tables,
-                  id_col=id_col, vec_col=vec_col, seed=seed).write.mode(
-        "overwrite"
-    ).partitionBy("table").parquet(index_path)
+    rows, manifest = _lsh_model(emb, dim=dim, bits=bits, n_tables=n_tables,
+                                id_col=id_col, vec_col=vec_col, seed=seed,
+                                quantized=quantized)
+    rows.write.mode("overwrite").partitionBy("table").parquet(index_path)
     if quantized:
         _write_lsh_quantized(emb, index_path, dim=dim, id_col=id_col,
                              vec_col=vec_col, qbatch="build",
                              mode="overwrite")
-    write_index_manifest(
-        emb.sparkSession, index_path,
+    write_index_manifest(emb.sparkSession, index_path, manifest)
+
+
+def _lsh_model(emb: DataFrame, *, dim: int, bits: int, n_tables: int,
+               id_col: str, vec_col: str, seed: int,
+               quantized: bool) -> tuple[DataFrame, dict]:
+    """Corpus → ``(postings rows, manifest)``: the model step
+    :func:`lsh_build_index` writes and :func:`ann_index_rebuild` swaps
+    in."""
+    return (
+        _lsh_postings(emb, dim=dim, bits=bits, n_tables=n_tables,
+                      id_col=id_col, vec_col=vec_col, seed=seed),
         lsh_manifest(dim=dim, bits=bits, n_tables=n_tables, seed=seed,
                      id_col=id_col, vec_col=vec_col, quantized=quantized),
     )
@@ -637,6 +656,32 @@ def _lsh_postings(emb: DataFrame, *, dim: int, bits: int, n_tables: int,
     )
 
 
+def _lsh_config(spark, index_path: str, caller: str, *, dim, bits,
+                n_tables, seed, id_col, vec_col):
+    """``(manifest, dim, bits, n_tables, seed)`` for an LSH append or
+    probe: explicit parameters are checked against the manifest
+    (:func:`_validate_manifest_params`), omitted ones resolve from it;
+    ``manifest`` is None for a manifest-less index."""
+    manifest = read_index_manifest(spark, index_path)
+    if manifest is not None:
+        _validate_manifest_params(
+            manifest,
+            {"dim": dim, "bits": bits, "n_tables": n_tables,
+             "seed": seed, "id_col": id_col, "vec_col": vec_col},
+            index_path,
+        )
+    dim = _resolved(manifest, "dim", dim)
+    if dim is None:
+        raise ValueError(
+            f"{caller}: dim not given and no manifest at "
+            f"{index_path} — build with lsh_build_index (r13+) or pass "
+            "dim explicitly"
+        )
+    return (manifest, dim, _resolved(manifest, "bits", bits, 8),
+            _resolved(manifest, "n_tables", n_tables, 16),
+            _resolved(manifest, "seed", seed, 42))
+
+
 def lsh_append(new_emb: DataFrame, index_path: str, *,
                dim: int | None = None,
                bits: int | None = None, n_tables: int | None = None,
@@ -667,24 +712,9 @@ def lsh_append(new_emb: DataFrame, index_path: str, *,
     defaults to following the build (append to the sidecar iff the
     index has one)."""
     spark = new_emb.sparkSession
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is not None:
-        _validate_manifest_params(
-            manifest,
-            {"dim": dim, "bits": bits, "n_tables": n_tables,
-             "seed": seed, "id_col": id_col, "vec_col": vec_col},
-            index_path,
-        )
-    dim = _resolved(manifest, "dim", dim)
-    bits = _resolved(manifest, "bits", bits, 8)
-    n_tables = _resolved(manifest, "n_tables", n_tables, 16)
-    seed = _resolved(manifest, "seed", seed, 42)
-    if dim is None:
-        raise ValueError(
-            "lsh_append: dim not given and no manifest at "
-            f"{index_path} — build with lsh_build_index (r13+) or pass "
-            "dim explicitly"
-        )
+    manifest, dim, bits, n_tables, seed = _lsh_config(
+        spark, index_path, "lsh_append", dim=dim, bits=bits,
+        n_tables=n_tables, seed=seed, id_col=id_col, vec_col=vec_col)
     root = manifest.get("_root", index_path) if manifest is not None else None
     epoch = int(manifest.get("epoch", 0)) if manifest is not None else 0
     if root is not None:
@@ -697,10 +727,7 @@ def lsh_append(new_emb: DataFrame, index_path: str, *,
         mode
     ).partitionBy("table").parquet(target)
     if quantized is None:
-        quantized = (
-            manifest.get("quantized", False) if manifest is not None
-            else _quantized_store_exists(spark, index_path)
-        )
+        quantized = _has_int8_store(spark, manifest, index_path)
     if quantized:
         # The INT8 sidecar store ALWAYS lives at the index ROOT (r16):
         # a batch-keyed caller may pass the batch dir as the TARGET
@@ -789,31 +816,13 @@ def lsh_probe_indexed(emb: DataFrame, index_path: str, query_id: int,
     from operator import or_
 
     spark = emb.sparkSession
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is not None:
-        _validate_manifest_params(
-            manifest,
-            {"dim": dim, "bits": bits, "n_tables": n_tables,
-             "seed": seed, "id_col": id_col, "vec_col": vec_col},
-            index_path,
-        )
-    dim = _resolved(manifest, "dim", dim)
-    bits = _resolved(manifest, "bits", bits, 8)
-    n_tables = _resolved(manifest, "n_tables", n_tables, 16)
-    seed = _resolved(manifest, "seed", seed, 42)
-    if dim is None:
-        raise ValueError(
-            "lsh_probe_indexed: dim not given and no manifest at "
-            f"{index_path} — build with lsh_build_index (r13+) or pass "
-            "dim explicitly"
-        )
+    manifest, dim, bits, n_tables, seed = _lsh_config(
+        spark, index_path, "lsh_probe_indexed", dim=dim, bits=bits,
+        n_tables=n_tables, seed=seed, id_col=id_col, vec_col=vec_col)
     if rescore not in ("auto", "int8", "float"):
         raise ValueError(f"lsh_probe_indexed: unknown rescore={rescore!r}")
     if rescore == "auto":
-        has_q = (
-            manifest.get("quantized", False) if manifest is not None
-            else _quantized_store_exists(spark, index_path)
-        )
+        has_q = _has_int8_store(spark, manifest, index_path)
         rescore = "int8" if has_q else "float"
     qrow = (
         finite_vectors(emb, vec_col, dim)
@@ -964,32 +973,14 @@ def lsh_probe_indexed_batch(emb: DataFrame, index_path: str,
     from pyspark.sql.window import Window
 
     spark = emb.sparkSession
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is not None:
-        _validate_manifest_params(
-            manifest,
-            {"dim": dim, "bits": bits, "n_tables": n_tables,
-             "seed": seed, "id_col": id_col, "vec_col": vec_col},
-            index_path,
-        )
-    dim = _resolved(manifest, "dim", dim)
-    bits = _resolved(manifest, "bits", bits, 8)
-    n_tables = _resolved(manifest, "n_tables", n_tables, 16)
-    seed = _resolved(manifest, "seed", seed, 42)
-    if dim is None:
-        raise ValueError(
-            "lsh_probe_indexed_batch: dim not given and no manifest at "
-            f"{index_path} — build with lsh_build_index (r13+) or pass "
-            "dim explicitly"
-        )
+    manifest, dim, bits, n_tables, seed = _lsh_config(
+        spark, index_path, "lsh_probe_indexed_batch", dim=dim, bits=bits,
+        n_tables=n_tables, seed=seed, id_col=id_col, vec_col=vec_col)
     if rescore not in ("auto", "int8", "float"):
         raise ValueError(
             f"lsh_probe_indexed_batch: unknown rescore={rescore!r}")
     if rescore == "auto":
-        has_q = (
-            manifest.get("quantized", False) if manifest is not None
-            else _quantized_store_exists(spark, index_path)
-        )
+        has_q = _has_int8_store(spark, manifest, index_path)
         rescore = "int8" if has_q else "float"
 
     out_schema = T.StructType([
@@ -1780,7 +1771,17 @@ def _check_stale_append_markers(spark, index_root: str, epoch: int,
         )
 
 
-def _read_index_root(spark, index_path: str, part_col: str) -> DataFrame:
+def _root_dirs(fs, JPath, root: str, prefixes: tuple[str, ...]) -> list:
+    """The Hadoop paths of the directories directly under ``root`` whose
+    names start with one of ``prefixes``."""
+    return [
+        st.getPath() for st in fs.listStatus(JPath(root))
+        if st.isDirectory() and st.getPath().getName().startswith(prefixes)
+    ]
+
+
+def _read_index_root(spark, index_path: str, part_col: str, dirs=None,
+                     caller: str = "index read") -> DataFrame:
     """Read a materialized index root, tolerant of the MIXED layout
     :func:`lsh_append`'s at-least-once docs describe — one-shot build
     dirs (``table=*``/``cell=*``) at the root PLUS later batch-keyed
@@ -1790,25 +1791,37 @@ def _read_index_root(spark, index_path: str, part_col: str) -> DataFrame:
     layouts take the plain read (the extra cost is one driver-side
     listing); mixed roots read per depth group under ``basePath`` and
     union on the shared columns. The bookkeeping ``ingest_batch``
-    column is dropped either way — probes never key on it."""
+    column is dropped either way — probes never key on it.
+
+    ``dirs`` restricts the read to those Hadoop paths (the maintenance
+    verbs' snapshot). Mixed groups whose data columns diverge raise: the
+    union would silently DROP the difference (r15, r14 advisor)."""
     root = index_path.rstrip("/")
-    fs, JPath = _hadoop_fs(spark, root)
-    if fs is not None:
-        built, batched = [], []
-        for st in fs.listStatus(JPath(root)):
-            name = st.getPath().getName()
-            if not st.isDirectory():
-                continue
-            if name.startswith(f"{part_col}="):
-                built.append(st.getPath().toString())
-            elif name.startswith("ingest_batch="):
-                batched.append(st.getPath().toString())
-        if built and batched:
-            a = spark.read.option("basePath", root).parquet(*built)
-            b = spark.read.option("basePath", root).parquet(*batched)
-            cols = [c for c in b.columns if c != "ingest_batch"]
-            return a.select(*cols).unionByName(b.select(*cols))
-    df = spark.read.parquet(root)
+    listed = dirs
+    if listed is None:
+        fs, JPath = _hadoop_fs(spark, root)
+        listed = [] if fs is None else _root_dirs(
+            fs, JPath, root, (f"{part_col}=", "ingest_batch="))
+    built, batched = (
+        [d.toString() for d in listed if d.getName().startswith(prefix)]
+        for prefix in (f"{part_col}=", "ingest_batch=")
+    )
+    if built and batched:
+        a = spark.read.option("basePath", root).parquet(*built)
+        b = spark.read.option("basePath", root).parquet(*batched)
+        cols = [c for c in b.columns if c != "ingest_batch"]
+        built_cols = set(a.columns) - {"ingest_batch"}
+        if built_cols != set(cols):
+            raise RuntimeError(
+                f"{caller}: mixed-layout column sets diverge at {root} — "
+                f"built dirs {sorted(built_cols)} vs batch dirs "
+                f"{sorted(cols)}; refusing to read them as one index (the "
+                "union would drop the difference). Align the schemas "
+                "(re-ingest or backfill the missing column) and re-run."
+            )
+        return a.select(*cols).unionByName(b.select(*cols))
+    df = (spark.read.parquet(root) if dirs is None
+          else spark.read.option("basePath", root).parquet(*built, *batched))
     return df.drop("ingest_batch") if "ingest_batch" in df.columns else df
 
 
@@ -2066,18 +2079,14 @@ def ivf_train_centroids(emb: DataFrame, n_cells: int = 16, seed: int = 42,
     # rows of one vector column) so persisting it is safe at any corpus
     # size; same rows/partitions/order → centroids are bit-identical
     # (verified against the oracle-pinned recall keys).
-    # SPARK_GRAFT_TRAIN_PERSIST=0 disables (A/B harness).
-    persisted = None
-    if os.environ.get("SPARK_GRAFT_TRAIN_PERSIST", "1") != "0":
-        persisted = train = train.persist()
+    train = train.persist()
     try:
         # coarse quantizers don't need convergence (FAISS trains IVF with
         # ~10 iters); 8 halves the fit cost vs 20 with recall unchanged
         # on the fixture (test_ivf_topk_recall)
         model = KMeans(k=n_cells, seed=seed, maxIter=8).fit(train)
     finally:
-        if persisted is not None:
-            persisted.unpersist()
+        train.unpersist()
     C = np.stack([np.asarray(c, dtype=np.float64) for c in model.clusterCenters()])
     norms = np.linalg.norm(C, axis=1, keepdims=True)
     C = C / np.clip(norms, 1e-12, None)
@@ -2145,6 +2154,22 @@ def ivf_build_index(emb: DataFrame, index_path: str, n_cells: int = 16,
     manifest so :func:`ivf_append` keeps the schema consistent
     automatically; the default stays off (registered keys and existing
     layouts unchanged)."""
+    rows, manifest, C = _ivf_model(
+        emb, n_cells=n_cells, seed=seed, vec_col=vec_col,
+        cache_key=cache_key, dim=dim, id_col=id_col,
+        drift_reference=drift_reference, int8_cols=int8_cols,
+    )
+    rows.write.mode("overwrite").partitionBy("cell").parquet(index_path)
+    write_index_manifest(emb.sparkSession, index_path, manifest)
+    return C
+
+
+def _ivf_model(emb: DataFrame, *, n_cells: int, seed: int, vec_col: str,
+               cache_key: str | None, dim: int | None, id_col: str,
+               drift_reference: bool, int8_cols: bool):
+    """Corpus → ``(rows, manifest, centroids)``, the model step
+    :func:`ivf_build_index` writes and :func:`ann_index_rebuild` swaps
+    in."""
     C = ivf_train_centroids(
         emb, n_cells=n_cells, seed=seed, vec_col=vec_col, cache_key=cache_key,
         dim=dim,
@@ -2152,13 +2177,11 @@ def ivf_build_index(emb: DataFrame, index_path: str, n_cells: int = 16,
     rows = ivf_assign_full(emb, C, vec_col, dim=dim)
     if int8_cols:
         rows = quantize_int8(rows, id_col, vec_col)
-    rows.write.mode("overwrite").partitionBy("cell").parquet(index_path)
     manifest = ivf_manifest(emb, C, dim=dim, n_cells=n_cells, seed=seed,
                             id_col=id_col, vec_col=vec_col,
                             drift_reference=drift_reference)
     manifest["int8_cols"] = int8_cols
-    write_index_manifest(emb.sparkSession, index_path, manifest)
-    return C
+    return rows, manifest, C
 
 
 def ivf_manifest(emb: DataFrame, centroids: np.ndarray, *,
@@ -2186,6 +2209,19 @@ def ivf_manifest(emb: DataFrame, centroids: np.ndarray, *,
             emb, centroids, dim=dim, id_col=id_col, vec_col=vec_col
         )
     return manifest
+
+
+def _manifest_centroids(manifest: dict | None, index_path: str,
+                        caller: str) -> np.ndarray:
+    """The coarse quantizer an IVF append/probe resolves from the
+    manifest when no ``centroids`` were passed."""
+    if manifest is None or manifest.get("centroids") is None:
+        raise ValueError(
+            f"{caller}: centroids not given and no manifest at "
+            f"{index_path} — build with ivf_build_index (r13+) or "
+            "pass centroids explicitly"
+        )
+    return np.asarray(manifest["centroids"], dtype=np.float64)
 
 
 def ivf_append(new_emb: DataFrame, index_path: str,
@@ -2235,13 +2271,7 @@ def ivf_append(new_emb: DataFrame, index_path: str,
         )
         dim = _resolved(manifest, "dim", dim)
     if centroids is None:
-        if manifest is None or manifest.get("centroids") is None:
-            raise ValueError(
-                f"ivf_append: centroids not given and no manifest at "
-                f"{index_path} — build with ivf_build_index (r13+) or "
-                "pass centroids explicitly"
-            )
-        centroids = np.asarray(manifest["centroids"], dtype=np.float64)
+        centroids = _manifest_centroids(manifest, index_path, "ivf_append")
     if int8_cols is None:  # follow the build so the schema stays uniform
         int8_cols = bool(manifest.get("int8_cols", False)) \
             if manifest is not None else False
@@ -2508,14 +2538,8 @@ def ivf_probe_indexed(spark, index_path: str,
     identical to the float path (pinned in tests/test_layouts.py).
     Default behavior on existing float-only layouts is unchanged."""
     if centroids is None:
-        m = read_index_manifest(spark, index_path)
-        if m is None or m.get("centroids") is None:
-            raise ValueError(
-                f"ivf_probe_indexed: centroids not given and no manifest "
-                f"at {index_path} — build with ivf_build_index (r13+) or "
-                "pass centroids explicitly"
-            )
-        centroids = np.asarray(m["centroids"], dtype=np.float64)
+        centroids = _manifest_centroids(read_index_manifest(
+            spark, index_path), index_path, "ivf_probe_indexed")
     qv = np.asarray(query_vec, dtype=np.float64)
     probes = [int(c) for c in (centroids @ qv).argsort()[::-1][:nprobe]]
     idx = _read_index_root(spark, index_path, "cell") \
@@ -2924,22 +2948,7 @@ def pq_adc_topk(codes: DataFrame, codebooks: np.ndarray, query_vec,
 
     Returns (id_col, label_col, adc_score) — scores rounded to 6 dp.
     """
-    m, ksub, dsub = codebooks.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    lut = np.einsum(
-        "mkd,md->mk", codebooks, q.reshape(m, dsub)
-    )  # (m, ksub) dots
-    # float(v) before repr: numpy >= 2 renders repr(np.float64(x)) as
-    # "np.float64(x)", which would be invalid SQL (r7 review; the
-    # container's numpy 1.26 masked it)
-    lut_sql = "array(" + ", ".join(
-        "array(" + ", ".join(f"{float(v)!r}D" for v in row) + ")"
-        for row in lut
-    ) + ")"
-    score = F.expr(
-        f"aggregate(sequence(1, {m}), 0D, (acc, i) -> acc + "
-        f"element_at(element_at({lut_sql}, i), CAST(pq_code[i-1] AS INT) + 1))"
-    )
+    score = _adc_score_expr(codebooks, query_vec)
     return (
         codes.select(id_col, label_col, F.round(score, 6).alias("adc_score"))
         .orderBy(F.desc("adc_score"), F.asc(id_col))
@@ -3098,14 +3107,16 @@ def _residual_df(assigned: DataFrame, centroids: np.ndarray,
 def _adc_score_expr(codebooks: np.ndarray, query_vec: np.ndarray,
                     code_col: str = "pq_code") -> Column:
     """The asymmetric-distance score as a pure-JVM literal-LUT
-    expression (deliberately mirrors :func:`pq_adc_topk`'s certified
-    expression, kept separate so the registered PQ key's engine is
-    untouched): the (m × ksub) query·centroid table ships as a literal
-    nested array and each code row costs m ``element_at`` lookups —
-    the scan reads ONLY the code column."""
+    expression (:func:`pq_adc_topk`'s and the materialized probes'):
+    the (m × ksub) query·centroid table ships as a literal nested array
+    and each code row costs m ``element_at`` lookups — the scan reads
+    ONLY the code column."""
     m, ksub, dsub = codebooks.shape
     q = np.asarray(query_vec, dtype=np.float64)
     lut = np.einsum("mkd,md->mk", codebooks, q.reshape(m, dsub))
+    # float(v) before repr: numpy >= 2 renders repr(np.float64(x)) as
+    # "np.float64(x)", which would be invalid SQL (r7 review; the
+    # container's numpy 1.26 masked it)
     lut_sql = "array(" + ", ".join(
         "array(" + ", ".join(f"{float(v)!r}D" for v in row) + ")"
         for row in lut
@@ -3164,39 +3175,48 @@ def ivfpq_build_index(emb: DataFrame, index_path: str, *,
     one-shot) hold for both variants (tests/test_layouts.py).
     """
     _check_ksub_int8(ksub, "ivfpq_build_index")
+    rows, manifest, model = _ivfpq_model(
+        emb, n_cells=n_cells, m=m, ksub=ksub, seed=seed, id_col=id_col,
+        vec_col=vec_col, dim=dim, cache_key=cache_key,
+        drift_reference=drift_reference, residual=residual,
+    )
+    rows.write.mode("overwrite").partitionBy("cell").parquet(index_path)
+    write_index_manifest(emb.sparkSession, index_path, manifest)
+    return model
+
+
+def _ivfpq_model(emb: DataFrame, *, n_cells: int, m: int, ksub: int,
+                 seed: int, id_col: str, vec_col: str, dim: int | None,
+                 cache_key: str | None, drift_reference: bool,
+                 residual: bool):
+    """Corpus → ``(rows, manifest, (centroids, codebooks))``, the model
+    step :func:`ivfpq_build_index` writes and :func:`ann_index_rebuild`
+    swaps in. Callers check ``ksub`` (:func:`_check_ksub_int8`)."""
     C = ivf_train_centroids(
         emb, n_cells=n_cells, seed=seed, vec_col=vec_col,
         cache_key=cache_key, dim=dim,
     )
     assigned = ivf_assign_full(emb, C, vec_col, dim=dim)
-    if residual:
-        # train the codebooks ON RESIDUALS (x - centroid[cell]) — the
-        # FAISS IVFPQ formulation: the coarse quantizer explains the
-        # between-cell variance, the 16-byte budget spends itself on
-        # within-cell detail. cache_key must not collide with the
-        # raw-vector books.
-        books = pq_train_codebooks(
-            _residual_df(assigned, C, vec_col), m=m, ksub=ksub, seed=seed,
-            id_col=id_col, vec_col=vec_col,
-            cache_key=None if cache_key is None else f"{cache_key}|res",
-            dim=dim,
-        )
-        rows = pq_encode_rows(assigned, books, vec_col, dim=dim,
-                              centroids=C)
-    else:
-        books = pq_train_codebooks(
-            emb, m=m, ksub=ksub, seed=seed, id_col=id_col, vec_col=vec_col,
-            cache_key=cache_key, dim=dim,
-        )
-        rows = pq_encode_rows(assigned, books, vec_col, dim=dim)
-    rows.write.mode("overwrite").partitionBy("cell").parquet(index_path)
+    # residual=True trains the codebooks ON RESIDUALS (x - centroid[cell])
+    # — the FAISS IVFPQ formulation: the coarse quantizer explains the
+    # between-cell variance, the 16-byte budget spends itself on
+    # within-cell detail. cache_key must not collide with the
+    # raw-vector books.
+    if residual and cache_key is not None:
+        cache_key = f"{cache_key}|res"
+    books = pq_train_codebooks(
+        _residual_df(assigned, C, vec_col) if residual else emb,
+        m=m, ksub=ksub, seed=seed, id_col=id_col, vec_col=vec_col,
+        cache_key=cache_key, dim=dim,
+    )
+    rows = pq_encode_rows(assigned, books, vec_col, dim=dim,
+                          centroids=C if residual else None)
     manifest = ivfpq_manifest(emb, C, books, dim=dim, n_cells=n_cells, m=m,
                               ksub=ksub, seed=seed, id_col=id_col,
                               vec_col=vec_col,
                               drift_reference=drift_reference)
     manifest["residual"] = bool(residual)
-    write_index_manifest(emb.sparkSession, index_path, manifest)
-    return C, books
+    return rows, manifest, (C, books)
 
 
 def ivfpq_manifest(emb: DataFrame, centroids: np.ndarray,
@@ -3223,6 +3243,16 @@ def ivfpq_manifest(emb: DataFrame, centroids: np.ndarray,
     return manifest
 
 
+def _ivfpq_manifest_at(spark, index_path: str, caller: str) -> dict:
+    manifest = read_index_manifest(spark, index_path)
+    if manifest is None or manifest.get("kind") != "ivfpq":
+        raise ValueError(
+            f"{caller}: no ivfpq manifest at {index_path} — build with "
+            "ivfpq_build_index"
+        )
+    return manifest
+
+
 def ivfpq_append(new_emb: DataFrame, index_path: str, *,
                  mode: str = "append") -> None:
     """Incremental IVF+PQ maintenance — :func:`ivf_append`'s shape with
@@ -3237,12 +3267,7 @@ def ivfpq_append(new_emb: DataFrame, index_path: str, *,
     exactly like :func:`ivf_append`. Participates in the epoch/marker
     race protocol."""
     spark = new_emb.sparkSession
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is None or manifest.get("kind") != "ivfpq":
-        raise ValueError(
-            f"ivfpq_append: no ivfpq manifest at {index_path} — build "
-            "with ivfpq_build_index"
-        )
+    manifest = _ivfpq_manifest_at(spark, index_path, "ivfpq_append")
     dim = manifest.get("dim")
     vec_col = manifest.get("vec_col", "embedding")
     C = np.asarray(manifest["centroids"], dtype=np.float64)
@@ -3280,12 +3305,7 @@ def ivfpq_probe_indexed(spark, index_path: str, query_vec, k: int = 10,
     shortlist both cost recall — raise ``nprobe``/``shortlist`` for
     guarantees (at ``nprobe = n_cells`` with a corpus-sized shortlist
     this converges to brute force, the derived-oracle argument)."""
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is None or manifest.get("kind") != "ivfpq":
-        raise ValueError(
-            f"ivfpq_probe_indexed: no ivfpq manifest at {index_path} — "
-            "build with ivfpq_build_index"
-        )
+    manifest = _ivfpq_manifest_at(spark, index_path, "ivfpq_probe_indexed")
     id_col = manifest.get("id_col", "vec_id")
     C = np.asarray(manifest["centroids"], dtype=np.float64)
     books = np.asarray(manifest["codebooks"], dtype=np.float64)
@@ -3360,12 +3380,8 @@ def ivfpq_probe_indexed_batch(emb: DataFrame, index_path: str,
     from pyspark.sql.window import Window
 
     spark = emb.sparkSession
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is None or manifest.get("kind") != "ivfpq":
-        raise ValueError(
-            f"ivfpq_probe_indexed_batch: no ivfpq manifest at "
-            f"{index_path} — build with ivfpq_build_index"
-        )
+    manifest = _ivfpq_manifest_at(spark, index_path,
+                                  "ivfpq_probe_indexed_batch")
     id_col = manifest.get("id_col", "vec_id")
     label_col = "label"
     vec_col = manifest.get("vec_col", "embedding")
@@ -3466,6 +3482,63 @@ def ivfpq_probe_indexed_batch(emb: DataFrame, index_path: str,
 # ---------------------------------------------------------------------------
 
 
+#: kind → (partition column, sort keys, required columns, range key) of
+#: each materialized layout; ``{id}``/``{vec}`` stand for the manifest's
+#: id and vector column names (:func:`_index_kind` fills them in)
+_INDEX_KINDS = {
+    "lsh": ("table", ("table", "bucket"), ("table", "bucket", "{id}"),
+            "n_tables"),
+    "ivf": ("cell", ("cell", "{id}"), ("cell", "{id}", "{vec}"), "n_cells"),
+    # same cell layout as ivf, the PQ codes ride the row
+    "ivfpq": ("cell", ("cell", "{id}"), ("cell", "{id}", "{vec}", "pq_code"),
+              "n_cells"),
+}
+
+#: the staging dirs the maintenance verbs write next to the index root
+#: (``{root}__{op}_stage``, plus compact's INT8-store stage)
+_STAGE_SUFFIXES = ("__compact_stage", "__compact_qstage", "__rebuild_stage")
+
+#: the error-message parts that differ between the two maintenance verbs
+_MAINT_TEXT = {
+    "compact": {
+        "by_path": "compact by path; rebuild with "
+                   "ivf_build_index/lsh_build_index",
+        "crashed": "compaction crashed mid-swap. Run ann_index_recover("
+                   "spark, index_path) to roll back to the pre-swap state "
+                   "losslessly",
+        "snapshot": "compaction",
+        "rerun": "compaction ",
+        "swapped": "compacted layout. The pre-swap bytes are preserved "
+                   "under the _tomb_* directories; merge the racing batch "
+                   "back (or re-ingest it), delete the tombstones and the "
+                   "markers, then re-run (ann_index_recover also rolls "
+                   "this state back losslessly, racing rows included).",
+    },
+    "rebuild": {
+        "by_path": "rebuild by path",
+        "crashed": "maintenance pass crashed mid-swap. Run "
+                   "ann_index_recover(spark, index_path)",
+        "snapshot": "rebuild",
+        "rerun": "",
+        "swapped": "rebuilt layout and were assigned against the OLD "
+                   "quantizer besides. The pre-swap bytes are preserved "
+                   "under the _tomb_* directories; run ann_index_recover "
+                   "to roll back losslessly, re-ingest the racing batch, "
+                   "then re-run.",
+    },
+}
+
+
+def _index_kind(manifest: dict) -> tuple[str, list, set, str]:
+    """``(partition column, sort keys, required columns, range key)`` of
+    the manifest's kind (:data:`_INDEX_KINDS`), column names resolved."""
+    part_col, sort_cols, need, range_key = _INDEX_KINDS[manifest["kind"]]
+    names = {"id": manifest.get("id_col", "vec_id"),
+             "vec": manifest.get("vec_col", "embedding")}
+    return (part_col, [c.format(**names) for c in sort_cols],
+            {c.format(**names) for c in need}, range_key)
+
+
 def _acquire_maint_lock(spark, fs, JPath, root: str, caller: str) -> None:
     """Atomically create the root-level maintenance lock (r16, VERDICT
     r15 missing #3) or fail loudly. ``FileSystem.createNewFile`` is the
@@ -3481,6 +3554,157 @@ def _acquire_maint_lock(spark, fs, JPath, root: str, caller: str) -> None:
             f"{root} — another compact/rebuild is running (wait for it), "
             "or a previous one crashed (run ann_index_recover to roll "
             "back/forward and clear the lock)."
+        )
+
+
+def _write_bumped_manifest(spark, root: str, manifest: dict,
+                           epoch: int) -> None:
+    """Rewrite ``manifest`` at ``epoch`` from its RAW entries: sidecar
+    pointers stay authoritative, no payload is loaded or rewritten."""
+    bumped = dict(manifest)  # raw entries: sidecar pointers, no load
+    for payload, (pointer, _) in _SIDECAR_KEYS.items():
+        if bumped.get(pointer):
+            bumped.pop(payload, None)
+    bumped["epoch"] = epoch
+    write_index_manifest(spark, root, bumped)
+
+
+@contextmanager
+def _maintenance(spark, index_path: str, op: str, target_bytes: int):
+    """The opening both maintenance verbs share: resolve the kind, take
+    the lock, refuse leftover tombstones/sentinels and stale append
+    markers, snapshot the markers and the data dirs (their bytes size
+    the rewrite). Yields the snapshot; releases the lock on exit."""
+    from .layout import list_data_files
+
+    caller, text = f"ann_index_{op}", _MAINT_TEXT[op]
+    manifest = read_index_manifest(spark, index_path)
+    if manifest is None:
+        raise ValueError(
+            f"{caller}: no manifest at {index_path} — only "
+            f"self-describing (r13+) indexes {text['by_path']}"
+        )
+    kind = manifest.get("kind")
+    if kind not in _INDEX_KINDS:
+        raise ValueError(f"{caller}: unknown index kind {kind!r}")
+    part_col, sort_cols, _, _ = _index_kind(manifest)
+    epoch = int(manifest.get("epoch", 0))
+    root = index_path.rstrip("/")
+    fs, JPath = _hadoop_fs(spark, root)
+    if fs is None:  # pragma: no cover — Connect/remote runtimes
+        raise RuntimeError(
+            f"{caller}: needs driver-side Hadoop FileSystem "
+            "access (not available on Spark Connect)"
+        )
+    _acquire_maint_lock(spark, fs, JPath, root, caller)
+    try:
+        leftover = _root_dirs(fs, JPath, root, ("_tomb_",))
+        leftover_sentinels = [
+            n for n in (_TOMB_STAGED_SENTINEL, _TOMB_SWAPPED_SENTINEL)
+            if fs.exists(JPath(f"{root}/{n}"))
+        ]
+        if leftover or leftover_sentinels:
+            raise RuntimeError(
+                f"{caller}: leftover tombstone dirs/sentinels under "
+                f"{root} ({sorted(p.getName() for p in leftover)} + "
+                f"{leftover_sentinels}) — a previous {text['crashed']}, "
+                "then re-run."
+            )
+        _check_stale_append_markers(spark, root, epoch, caller)
+        markers_before = set(_list_append_markers(spark, root))
+
+        old_dirs = _root_dirs(fs, JPath, root,
+                              (f"{part_col}=", "ingest_batch="))
+        if not old_dirs:
+            raise ValueError(f"{caller}: no data directories under {root}")
+        files_in = [
+            f for d in old_dirs for f in list_data_files(spark, d.toString())
+        ]
+        bytes_in = sum(sz for _, sz in files_in)
+        yield SimpleNamespace(
+            spark=spark, op=op, caller=caller, manifest=manifest, kind=kind,
+            epoch=epoch, root=root, fs=fs, JPath=JPath, part_col=part_col,
+            sort_cols=sort_cols, markers_before=markers_before,
+            old_dirs=old_dirs,
+            n_batch_dirs=sum(
+                1 for p in old_dirs if p.getName().startswith("ingest_batch=")
+            ),
+            n_files_in=len(files_in), bytes_in=bytes_in,
+            n_out=max(1, -(-bytes_in // target_bytes)),  # ceil
+        )
+    finally:
+        fs.delete(JPath(f"{root}/{_MAINT_LOCK}"), False)
+
+
+def _swap_in(mt, rows: DataFrame, race_window_hook=None) -> None:
+    """The staged, TOMBSTONED swap both maintenance verbs share: stage
+    ``rows`` clustered by the kind's sort keys, abort on an empty stage
+    or an append raced since the snapshot, tombstone the snapshotted
+    dirs, write the staged sentinel, swap the staged dirs in, re-check
+    for an append inside the swap window. No commit point: each verb's
+    tail commits. ``race_window_hook`` (test-only) runs after the stage
+    write, where a racing append is simulated."""
+    spark, fs, JPath, root = mt.spark, mt.fs, mt.JPath, mt.root
+    text = _MAINT_TEXT[mt.op]
+    staging = f"{root}__{mt.op}_stage"
+    (
+        rows.repartitionByRange(mt.n_out, *mt.sort_cols)
+        .sortWithinPartitions(*mt.sort_cols)
+        .write.mode("overwrite")
+        .partitionBy(mt.part_col)
+        .parquet(staging)
+    )
+    if race_window_hook is not None:
+        race_window_hook()
+    staged_dirs = _root_dirs(fs, JPath, staging, (f"{mt.part_col}=",))
+    if not staged_dirs:  # never swap the index away for an empty stage
+        fs.delete(JPath(staging), True)
+        raise RuntimeError(
+            f"{mt.caller}: staging produced no {mt.part_col}= dirs "
+            f"under {staging} — aborting before the swap"
+        )
+    raced = set(_list_append_markers(spark, root)) - mt.markers_before
+    if raced:  # an append completed since the snapshot — abort, zero loss
+        fs.delete(JPath(staging), True)
+        raise RuntimeError(
+            f"{mt.caller}: append(s) {sorted(raced)} completed at "
+            f"{root} after the {text['snapshot']} snapshot was read — "
+            "aborting BEFORE the swap (no rows lost; the old directories "
+            f"are untouched). Re-run {text['rerun']}in the ingest loop's "
+            "quiet window."
+        )
+    for d in mt.old_dirs:
+        fs.rename(d, JPath(f"{root}/_tomb_{d.getName()}"))
+    # Tombstoning complete: record the STAGED dir names in a sentinel
+    # (r15, r14 advisor). The staged names need not mirror the old ones
+    # — batch folding rewrites ingest_batch=* dirs as cell=*/table=*
+    # dirs, and a staged name with no tombstone counterpart would
+    # otherwise survive a roll-back alongside the restored originals,
+    # doubling every folded row. The sentinel tells ann_index_recover
+    # exactly which root dirs a roll-back must delete.
+    # r16 (r15 advisor #4): the sentinel also records the snapshotted
+    # append markers and the pre-swap epoch, so a roll-FORWARD recovery
+    # can FINISH the pass (consume exactly those markers, bump a
+    # compaction's epoch) instead of leaving pending markers that
+    # describe folded ingest_batch dirs which no longer exist; ``op``
+    # tells recover which commit point applies.
+    _fs_write_bytes(
+        spark, f"{root}/{_TOMB_STAGED_SENTINEL}",
+        json.dumps(
+            {"staged": sorted(p.getName() for p in staged_dirs),
+             "markers": sorted(mt.markers_before),
+             "epoch": mt.epoch, "op": mt.op}
+        ).encode("utf-8"),
+    )
+    for p in staged_dirs:
+        fs.rename(p, JPath(f"{root}/{p.getName()}"))
+    fs.delete(JPath(staging), True)
+    raced = set(_list_append_markers(spark, root)) - mt.markers_before
+    if raced:  # the narrow swap-window race: loud, old bytes recoverable
+        raise RuntimeError(
+            f"{mt.caller}: append(s) {sorted(raced)} landed at {root} "
+            "DURING the directory swap — their rows are not in the "
+            + text["swapped"]
         )
 
 
@@ -3543,7 +3767,7 @@ def ann_index_compact(spark, index_path: str, *,
     ``foreachBatch`` invocations — micro-batches are serialized per
     query, so keying a maintenance pass off ``batch_id % N`` inside
     foreachBatch is safe by construction) remains the way to AVOID the
-    race; the epoch protocol is what makes violating it an error
+    race; the epoch/marker protocol is what makes violating it an error
     instead of data loss.
 
     Maintainer-vs-maintainer exclusion (r16, VERDICT r15 missing #3):
@@ -3554,14 +3778,19 @@ def ann_index_compact(spark, index_path: str, *,
     loudly at acquisition instead of interleaving tombstone renames;
     the epoch/marker protocol above covers append-vs-maintenance, the
     lock covers maintenance-vs-maintenance. A crashed holder leaves the
-    lock behind; :func:`ann_index_recover` clears it.
+    lock behind; :func:`ann_index_recover` clears it. The lock, the
+    snapshot and the swap are :func:`_maintenance` and
+    :func:`_swap_in`, shared with the rebuild; the commit point (the
+    swapped sentinel) and the epoch bump are this verb's own tail.
 
     Mixed layouts compact too (r14, r13 advisor): a root holding BOTH
     one-shot build dirs (``table=*``/``cell=*``) and batch-keyed append
     dirs (``ingest_batch=*/...``) — which ``lsh_append``'s at-least-once
     docs describe — used to fail partition discovery (conflicting
-    depths under one read); each depth group is now read under its own
-    ``basePath`` and unioned before the rewrite.
+    depths under one read); the snapshotted dirs are read through
+    :func:`_read_index_root` (each depth group under its own
+    ``basePath``, unioned), which refuses groups whose data columns
+    diverge.
 
     The index must be self-describing (r13 manifest): kind, partition
     key, id column and sort contract all resolve from the manifest, so
@@ -3573,186 +3802,27 @@ def ann_index_compact(spark, index_path: str, *,
     Returns ``{"kind", "n_files_in", "bytes_in", "n_files_out",
     "n_batch_dirs_folded", "epoch"}``.
 
-    ``_race_window_hook`` is a test-only injection point, called after
-    the snapshot read/stage and before the pre-swap marker check —
-    where a racing append is simulated.
+    ``_race_window_hook`` is a test-only injection point (see
+    :func:`_swap_in`) where a racing append is simulated.
     """
     from .layout import list_data_files
 
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is None:
-        raise ValueError(
-            f"ann_index_compact: no manifest at {index_path} — only "
-            "self-describing (r13+) indexes compact by path; rebuild "
-            "with ivf_build_index/lsh_build_index"
-        )
-    kind = manifest.get("kind")
-    id_col = manifest.get("id_col", "vec_id")
-    epoch = int(manifest.get("epoch", 0))
-    if kind == "lsh":
-        part_col, sort_cols = "table", ["table", "bucket"]
-    elif kind in ("ivf", "ivfpq"):  # same cell layout, codes ride the row
-        part_col, sort_cols = "cell", ["cell", id_col]
-    else:
-        raise ValueError(f"ann_index_compact: unknown index kind {kind!r}")
-
-    root = index_path.rstrip("/")
-    fs, JPath = _hadoop_fs(spark, root)
-    if fs is None:  # pragma: no cover — Connect/remote runtimes
-        raise RuntimeError(
-            "ann_index_compact: needs driver-side Hadoop FileSystem "
-            "access (not available on Spark Connect)"
-        )
-    jroot = JPath(root)
-    _acquire_maint_lock(spark, fs, JPath, root, "ann_index_compact")
-    try:
-
-        def _root_dirs(prefixes: tuple[str, ...]):
-            out = []
-            for st in fs.listStatus(jroot):
-                name = st.getPath().getName()
-                if st.isDirectory() and name.startswith(prefixes):
-                    out.append(st.getPath())
-            return out
-
-        leftover = _root_dirs(("_tomb_",))
-        leftover_sentinels = [
-            n for n in (_TOMB_STAGED_SENTINEL, _TOMB_SWAPPED_SENTINEL)
-            if fs.exists(JPath(f"{root}/{n}"))
-        ]
-        if leftover or leftover_sentinels:
-            raise RuntimeError(
-                f"ann_index_compact: leftover tombstone dirs/sentinels under "
-                f"{root} ({sorted(p.getName() for p in leftover)} + "
-                f"{leftover_sentinels}) — a previous compaction crashed "
-                "mid-swap. Run ann_index_recover(spark, index_path) to roll "
-                "back to the pre-swap state losslessly, then re-run."
-            )
-        _check_stale_append_markers(spark, root, epoch, "ann_index_compact")
-        markers_before = set(_list_append_markers(spark, root))
-
-        old_dirs = _root_dirs((f"{part_col}=", "ingest_batch="))
-        if not old_dirs:
-            raise ValueError(f"ann_index_compact: no data directories under {root}")
-        n_batch_dirs = sum(
-            1 for p in old_dirs if p.getName().startswith("ingest_batch=")
-        )
-        files_in = [
-            f for d in old_dirs for f in list_data_files(spark, d.toString())
-        ]
-        bytes_in = sum(sz for _, sz in files_in)
-        n_out = max(1, -(-bytes_in // target_bytes))  # ceil
-
-        # Mixed-depth layouts read per shape group (basePath keeps the hive
-        # partition columns), then union on the shared data columns.
-        built = [p for p in old_dirs if p.getName().startswith(f"{part_col}=")]
-        batched = [p for p in old_dirs if p.getName().startswith("ingest_batch=")]
-        groups = []
-        for dirs in (built, batched):
-            if dirs:
-                groups.append(
-                    spark.read.option("basePath", root)
-                    .parquet(*[p.toString() for p in dirs])
-                )
-        if len(groups) == 2:
-            # Mixed layouts must agree on the data columns (modulo the
-            # ingest_batch bookkeeping column) — deriving them from one
-            # group would silently DROP a column present only in the other
-            # from the rewritten index (r15, r14 advisor).
-            built_cols = {c for c in groups[0].columns if c != "ingest_batch"}
-            batch_cols = {c for c in groups[1].columns if c != "ingest_batch"}
-            if built_cols != batch_cols:
-                raise RuntimeError(
-                    "ann_index_compact: mixed-layout column sets diverge — "
-                    f"built dirs {sorted(built_cols)} vs batch dirs "
-                    f"{sorted(batch_cols)}; refusing to rewrite (a rewrite "
-                    "would drop the difference). Align the schemas (re-ingest "
-                    "or backfill the missing column) and re-run."
-                )
-        data_cols = [
-            c for c in groups[-1].columns if c != "ingest_batch"
-        ]
-        df = groups[0].select(*data_cols)
-        for g in groups[1:]:
-            df = df.unionByName(g.select(*data_cols))
-        staging = f"{root}__compact_stage"
-        (
-            df.repartitionByRange(n_out, *sort_cols)
-            .sortWithinPartitions(*sort_cols)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(staging)
-        )
-        if _race_window_hook is not None:
-            _race_window_hook()
-        staged_dirs = [
-            st.getPath() for st in fs.listStatus(JPath(staging))
-            if st.isDirectory() and st.getPath().getName().startswith(f"{part_col}=")
-        ]
-        if not staged_dirs:  # never swap the index away for an empty stage
-            fs.delete(JPath(staging), True)
-            raise RuntimeError(
-                f"ann_index_compact: staging produced no {part_col}= dirs "
-                f"under {staging} — aborting before the swap"
-            )
-        raced = set(_list_append_markers(spark, root)) - markers_before
-        if raced:  # an append completed since the snapshot — abort, zero loss
-            fs.delete(JPath(staging), True)
-            raise RuntimeError(
-                f"ann_index_compact: append(s) {sorted(raced)} completed at "
-                f"{root} after the compaction snapshot was read — aborting "
-                "BEFORE the swap (no rows lost; the old directories are "
-                "untouched). Re-run compaction in the ingest loop's quiet "
-                "window."
-            )
-        for d in old_dirs:
-            fs.rename(d, JPath(f"{root}/_tomb_{d.getName()}"))
-        # Tombstoning complete: record the STAGED dir names in a sentinel
-        # (r15, r14 advisor). The staged names need not mirror the old ones
-        # — batch folding rewrites ingest_batch=* dirs as cell=*/table=*
-        # dirs, and a staged name with no tombstone counterpart would
-        # otherwise survive a roll-back alongside the restored originals,
-        # doubling every folded row. The sentinel tells ann_index_recover
-        # exactly which root dirs a roll-back must delete.
-        # r16 (r15 advisor #4): the sentinel also records the snapshotted
-        # append markers and the pre-swap epoch, so a roll-FORWARD recovery
-        # can FINISH the compaction (consume exactly those markers, bump the
-        # epoch) instead of leaving pending markers that describe folded
-        # ingest_batch dirs which no longer exist.
-        _fs_write_bytes(
-            spark, f"{root}/{_TOMB_STAGED_SENTINEL}",
-            json.dumps(
-                {"staged": sorted(p.getName() for p in staged_dirs),
-                 "markers": sorted(markers_before),
-                 "epoch": epoch, "op": "compact"}
-            ).encode("utf-8"),
-        )
-        for p in staged_dirs:
-            fs.rename(p, JPath(f"{root}/{p.getName()}"))
-        fs.delete(JPath(staging), True)
-        raced = set(_list_append_markers(spark, root)) - markers_before
-        if raced:  # the narrow swap-window race: loud, old bytes recoverable
-            raise RuntimeError(
-                f"ann_index_compact: append(s) {sorted(raced)} landed at "
-                f"{root} DURING the directory swap — their rows are not in "
-                "the compacted layout. The pre-swap bytes are preserved "
-                "under the _tomb_* directories; merge the racing batch back "
-                "(or re-ingest it), delete the tombstones and the markers, "
-                "then re-run (ann_index_recover also rolls this state back "
-                "losslessly, racing rows included)."
-            )
+    with _maintenance(spark, index_path, "compact", target_bytes) as mt:
+        fs, JPath, root = mt.fs, mt.JPath, mt.root
+        _swap_in(mt, _read_index_root(spark, root, mt.part_col, mt.old_dirs,
+                                      mt.caller), _race_window_hook)
         # Swap committed (race check passed): from here recovery rolls
         # FORWARD — the compacted dirs are complete, the tombstones are
         # redundant bytes mid-deletion. A crash before this sentinel rolls
         # back; after it, ann_index_recover finishes the cleanup instead of
         # resurrecting originals next to the compacted copies.
         _fs_write_bytes(spark, f"{root}/{_TOMB_SWAPPED_SENTINEL}", b"{}")
-        for d in _root_dirs(("_tomb_",)):
+        for d in _root_dirs(fs, JPath, root, ("_tomb_",)):
             fs.delete(d, True)
         fs.delete(JPath(f"{root}/{_TOMB_STAGED_SENTINEL}"), False)
         fs.delete(JPath(f"{root}/{_TOMB_SWAPPED_SENTINEL}"), False)
 
-        if kind == "lsh" and _quantized_store_exists(spark, root):
+        if mt.kind == "lsh" and _quantized_store_exists(spark, root):
             qroot = _lsh_quantized_path(root)
             qbytes = sum(sz for _, sz in list_data_files(spark, qroot))
             qn_out = max(1, -(-qbytes // target_bytes))
@@ -3777,31 +3847,24 @@ def ann_index_compact(spark, index_path: str, *,
         # Success: consume the snapshotted markers BEFORE bumping the epoch
         # (a crash between the two leaves markers at the CURRENT epoch —
         # harmless pending state — never a false stale alarm), then bump.
-        log_root = f"{root}/{_APPEND_LOG_DIR}"
-        for name in markers_before:
-            fs.delete(JPath(f"{log_root}/{name}"), False)
-        bumped = dict(manifest)  # raw entries: sidecar pointers, no load
-        for payload, (pointer, _) in _SIDECAR_KEYS.items():
-            if bumped.get(pointer):
-                bumped.pop(payload, None)  # keep the pointer authoritative
-        bumped["epoch"] = epoch + 1
-        write_index_manifest(spark, root, bumped)
+        for name in mt.markers_before:
+            fs.delete(JPath(f"{root}/{_APPEND_LOG_DIR}/{name}"), False)
+        _write_bumped_manifest(spark, root, mt.manifest, mt.epoch + 1)
 
         n_files_out = len([
             f
-            for d in _root_dirs((f"{part_col}=", "ingest_batch="))
+            for d in _root_dirs(fs, JPath, root,
+                                (f"{mt.part_col}=", "ingest_batch="))
             for f in list_data_files(spark, d.toString())
         ])
         return {
-            "kind": kind,
-            "n_files_in": len(files_in),
-            "bytes_in": bytes_in,
+            "kind": mt.kind,
+            "n_files_in": mt.n_files_in,
+            "bytes_in": mt.bytes_in,
             "n_files_out": n_files_out,
-            "n_batch_dirs_folded": n_batch_dirs,
-            "epoch": epoch + 1,
+            "n_batch_dirs_folded": mt.n_batch_dirs,
+            "epoch": mt.epoch + 1,
         }
-    finally:
-        fs.delete(JPath(f"{root}/{_MAINT_LOCK}"), False)
 
 
 def ann_index_rebuild(spark, index_path: str, corpus=None, *,
@@ -3822,11 +3885,14 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
 
     What a rebuild does, per family (all resolve config from the
     manifest; explicit ``n_cells``/``m``/``ksub``/``bits``/``n_tables``/
-    ``seed`` override it — capacity changes ride the same verb):
+    ``seed`` override it — capacity changes ride the same verb). The
+    retrain is the build's own model step (:func:`_lsh_model` /
+    :func:`_ivf_model` / :func:`_ivfpq_model`, uncached — the stale
+    cached model is the thing being replaced), so a rebuild over a
+    corpus equals a fresh build over it:
 
     - **ivf**: retrain the coarse quantizer on the CURRENT corpus
-      (:func:`ivf_train_centroids`, uncached — the stale cached model is
-      the thing being replaced), reassign every row, rewrite the cell
+      (:func:`ivf_train_centroids`), reassign every row, rewrite the cell
       layout (ingest_batch dirs fold away like compaction), refresh the
       manifest's drift REFERENCE (:func:`ivf_drift_reference` over the
       post-drift corpus — the 3σ baseline must describe the data the new
@@ -3844,7 +3910,9 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
     For ivf/ivfpq it defaults to the index's OWN resident rows (the
     float vectors ride every row, so a path-only rebuild works — model
     columns ``cell``/``pq_code``/``qvec``/``scale`` are stripped and
-    re-derived); for lsh it is REQUIRED (postings store hashes, not
+    re-derived; a mixed root whose groups' data columns diverge is
+    refused rather than read with a column dropped); for lsh it is
+    REQUIRED (postings store hashes, not
     floats). Rows are preserved VERBATIM (no dedup), the same contract
     as :func:`ann_index_compact` — duplicates from replayed PLAIN
     appends (batch-keyed ``mode="overwrite"`` replays never duplicate)
@@ -3855,9 +3923,9 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
     shape as the original build; the RETRAIN stays cheap (bounded
     sample).
 
-    Crash/race discipline — the same staged-tombstone-sentinel swap as
-    :func:`ann_index_compact`, same maintenance lock
-    (:func:`_acquire_maint_lock`), same abort-on-raced-append protocol,
+    Crash/race discipline — compact's maintenance lock, snapshot and
+    staged-tombstone-sentinel swap, shared code (:func:`_maintenance`,
+    :func:`_swap_in`), so the same abort-on-raced-append protocol,
     with one difference: the COMMIT POINT is the new manifest's write
     (epoch bump), not a separate sentinel — a crash before it rolls the
     retrained layout back losslessly (old quantizer still authoritative,
@@ -3874,217 +3942,69 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
     """
     from .layout import list_data_files
 
-    manifest = read_index_manifest(spark, index_path)
-    if manifest is None:
-        raise ValueError(
-            f"ann_index_rebuild: no manifest at {index_path} — only "
-            "self-describing (r13+) indexes rebuild by path"
-        )
-    kind = manifest.get("kind")
-    if kind not in ("lsh", "ivf", "ivfpq"):
-        raise ValueError(f"ann_index_rebuild: unknown index kind {kind!r}")
-    id_col = manifest.get("id_col", "vec_id")
-    vec_col = manifest.get("vec_col", "embedding")
-    dim = manifest.get("dim")
-    epoch = int(manifest.get("epoch", 0))
-    if kind == "lsh":
-        part_col, sort_cols = "table", ["table", "bucket"]
-        if corpus is None:
+    with _maintenance(spark, index_path, "rebuild", target_bytes) as mt:
+        fs, JPath, root = mt.fs, mt.JPath, mt.root
+        manifest, kind = mt.manifest, mt.kind
+        if kind == "lsh" and corpus is None:
             raise ValueError(
                 "ann_index_rebuild: an LSH index stores postings (hashes),"
                 " not vectors — pass the corpus DataFrame to re-hash"
             )
-    else:
-        part_col, sort_cols = "cell", ["cell", id_col]
-    seed_new = int(seed if seed is not None else manifest.get("seed", 42))
-    if drift_reference is None:
-        drift_reference = "drift" in manifest
-
-    root = index_path.rstrip("/")
-    fs, JPath = _hadoop_fs(spark, root)
-    if fs is None:  # pragma: no cover — Connect/remote runtimes
-        raise RuntimeError(
-            "ann_index_rebuild: needs driver-side Hadoop FileSystem "
-            "access (not available on Spark Connect)"
-        )
-    jroot = JPath(root)
-    _acquire_maint_lock(spark, fs, JPath, root, "ann_index_rebuild")
-    try:
-        def _root_dirs(prefixes: tuple[str, ...]):
-            out = []
-            for st in fs.listStatus(jroot):
-                name = st.getPath().getName()
-                if st.isDirectory() and name.startswith(prefixes):
-                    out.append(st.getPath())
-            return out
-
-        leftover = _root_dirs(("_tomb_",))
-        leftover_sentinels = [
-            n for n in (_TOMB_STAGED_SENTINEL, _TOMB_SWAPPED_SENTINEL)
-            if fs.exists(JPath(f"{root}/{n}"))
-        ]
-        if leftover or leftover_sentinels:
-            raise RuntimeError(
-                f"ann_index_rebuild: leftover tombstone dirs/sentinels "
-                f"under {root} ({sorted(p.getName() for p in leftover)} + "
-                f"{leftover_sentinels}) — a previous maintenance pass "
-                "crashed mid-swap. Run ann_index_recover(spark, "
-                "index_path), then re-run."
-            )
-        _check_stale_append_markers(spark, root, epoch, "ann_index_rebuild")
-        markers_before = set(_list_append_markers(spark, root))
-
-        old_dirs = _root_dirs((f"{part_col}=", "ingest_batch="))
-        if not old_dirs:
-            raise ValueError(
-                f"ann_index_rebuild: no data directories under {root}"
-            )
-        n_batch_dirs = sum(
-            1 for p in old_dirs if p.getName().startswith("ingest_batch=")
-        )
-        bytes_in = sum(
-            sz for d in old_dirs
-            for _, sz in list_data_files(spark, d.toString())
-        )
-        n_out = max(1, -(-bytes_in // target_bytes))  # ceil
+        seed_new = int(_resolved(manifest, "seed", seed, 42))
+        if drift_reference is None:
+            drift_reference = "drift" in manifest
 
         # -------- retrain the model on the CURRENT corpus + re-derive rows
-        model_cols = {"cell", "pq_code", "qvec", "scale", "ingest_batch",
-                      "bucket", "table"}
+        common = {"seed": seed_new, "dim": manifest.get("dim"),
+                  "id_col": manifest.get("id_col", "vec_id"),
+                  "vec_col": manifest.get("vec_col", "embedding")}
         if corpus is None:  # ivf/ivfpq: the floats ride the index rows
-            resident = _read_index_root(spark, root, part_col)
-            corpus = resident.select(
-                *[c for c in resident.columns if c not in model_cols]
+            model_cols = {"cell", "pq_code", "qvec", "scale", "bucket",
+                          "table"}
+            resident = _read_index_root(spark, root, mt.part_col,
+                                        mt.old_dirs, mt.caller)
+            # The KMeans fit depends on its input's partitions and row
+            # order, and a multi-file root reads in file-listing order
+            # (write-job UUIDs in the names): a build + append root
+            # retrained into one of two models at random. Id-hashed,
+            # id-sorted slices make the model a function of the rows.
+            corpus = (
+                resident.select(
+                    *[c for c in resident.columns if c not in model_cols])
+                .repartition(mt.n_out, common["id_col"])
+                .sortWithinPartitions(common["id_col"])
             )
-        new_manifest: dict
+        n_cells_new = int(_resolved(manifest, "n_cells", n_cells, 16))
         if kind == "lsh":
-            bits_new = int(bits if bits is not None
-                           else manifest.get("bits", 8))
-            nt_new = int(n_tables if n_tables is not None
-                         else manifest.get("n_tables", 16))
-            rows = _lsh_postings(
-                corpus, dim=dim, bits=bits_new, n_tables=nt_new,
-                id_col=id_col, vec_col=vec_col, seed=seed_new,
-            )
-            new_manifest = lsh_manifest(
-                dim=dim, bits=bits_new, n_tables=nt_new, seed=seed_new,
-                id_col=id_col, vec_col=vec_col,
-                quantized=bool(manifest.get("quantized", False)),
+            rows, new_manifest = _lsh_model(
+                corpus, bits=int(_resolved(manifest, "bits", bits, 8)),
+                n_tables=int(_resolved(manifest, "n_tables", n_tables, 16)),
+                quantized=bool(manifest.get("quantized", False)), **common,
             )
         elif kind == "ivf":
-            nc_new = int(n_cells if n_cells is not None
-                         else manifest.get("n_cells", 16))
-            C_new = ivf_train_centroids(
-                corpus, n_cells=nc_new, seed=seed_new, vec_col=vec_col,
-                cache_key=None, dim=dim,
+            rows, new_manifest, _ = _ivf_model(
+                corpus, n_cells=n_cells_new,
+                cache_key=None, drift_reference=drift_reference,
+                int8_cols=bool(manifest.get("int8_cols", False)), **common,
             )
-            rows = ivf_assign_full(corpus, C_new, vec_col, dim=dim)
-            int8_cols = bool(manifest.get("int8_cols", False))
-            if int8_cols:
-                rows = quantize_int8(rows, id_col, vec_col)
-            new_manifest = ivf_manifest(
-                corpus, C_new, dim=dim, n_cells=nc_new, seed=seed_new,
-                id_col=id_col, vec_col=vec_col,
-                drift_reference=drift_reference,
-            )
-            new_manifest["int8_cols"] = int8_cols
         else:  # ivfpq
-            nc_new = int(n_cells if n_cells is not None
-                         else manifest.get("n_cells", 16))
-            m_new = int(m if m is not None else manifest.get("m", 16))
-            ks_new = int(ksub if ksub is not None
-                         else manifest.get("ksub", 32))
+            ks_new = int(_resolved(manifest, "ksub", ksub, 32))
             _check_ksub_int8(ks_new, "ann_index_rebuild")
-            residual = bool(manifest.get("residual", False))
-            C_new = ivf_train_centroids(
-                corpus, n_cells=nc_new, seed=seed_new, vec_col=vec_col,
-                cache_key=None, dim=dim,
+            rows, new_manifest, _ = _ivfpq_model(
+                corpus, n_cells=n_cells_new,
+                m=int(_resolved(manifest, "m", m, 16)), ksub=ks_new,
+                cache_key=None, drift_reference=drift_reference,
+                residual=bool(manifest.get("residual", False)), **common,
             )
-            assigned = ivf_assign_full(corpus, C_new, vec_col, dim=dim)
-            books_src = (
-                _residual_df(assigned, C_new, vec_col) if residual
-                else corpus
-            )
-            books = pq_train_codebooks(
-                books_src, m=m_new, ksub=ks_new, seed=seed_new,
-                id_col=id_col, vec_col=vec_col, cache_key=None, dim=dim,
-            )
-            rows = pq_encode_rows(
-                assigned, books, vec_col, dim=dim,
-                centroids=C_new if residual else None,
-            )
-            new_manifest = ivfpq_manifest(
-                corpus, C_new, books, dim=dim, n_cells=nc_new, m=m_new,
-                ksub=ks_new, seed=seed_new, id_col=id_col, vec_col=vec_col,
-                drift_reference=drift_reference,
-            )
-            new_manifest["residual"] = residual
-        new_manifest["epoch"] = epoch + 1
+        new_manifest["epoch"] = mt.epoch + 1
 
-        # -------- stage the rewritten layout (same shape as compaction)
-        staging = f"{root}__rebuild_stage"
-        (
-            rows.repartitionByRange(n_out, *sort_cols)
-            .sortWithinPartitions(*sort_cols)
-            .write.mode("overwrite")
-            .partitionBy(part_col)
-            .parquet(staging)
-        )
-        if _race_window_hook is not None:
-            _race_window_hook()
-        staged_dirs = [
-            st.getPath() for st in fs.listStatus(JPath(staging))
-            if st.isDirectory()
-            and st.getPath().getName().startswith(f"{part_col}=")
-        ]
-        if not staged_dirs:  # never swap the index away for an empty stage
-            fs.delete(JPath(staging), True)
-            raise RuntimeError(
-                f"ann_index_rebuild: staging produced no {part_col}= dirs "
-                f"under {staging} — aborting before the swap"
-            )
-        raced = set(_list_append_markers(spark, root)) - markers_before
-        if raced:  # an append completed since the snapshot — abort
-            fs.delete(JPath(staging), True)
-            raise RuntimeError(
-                f"ann_index_rebuild: append(s) {sorted(raced)} completed "
-                f"at {root} after the rebuild snapshot was read — "
-                "aborting BEFORE the swap (no rows lost; the old "
-                "directories are untouched). Re-run in the ingest loop's "
-                "quiet window."
-            )
-
-        # -------- tombstone swap (compact's choreography, rebuild commit)
-        for d in old_dirs:
-            fs.rename(d, JPath(f"{root}/_tomb_{d.getName()}"))
-        _fs_write_bytes(
-            spark, f"{root}/{_TOMB_STAGED_SENTINEL}",
-            json.dumps(
-                {"staged": sorted(p.getName() for p in staged_dirs),
-                 "markers": sorted(markers_before),
-                 "epoch": epoch, "op": "rebuild"}
-            ).encode("utf-8"),
-        )
-        for p in staged_dirs:
-            fs.rename(p, JPath(f"{root}/{p.getName()}"))
-        fs.delete(JPath(staging), True)
-        raced = set(_list_append_markers(spark, root)) - markers_before
-        if raced:  # the narrow swap-window race: loud, old bytes safe
-            raise RuntimeError(
-                f"ann_index_rebuild: append(s) {sorted(raced)} landed at "
-                f"{root} DURING the directory swap — their rows are not "
-                "in the rebuilt layout and were assigned against the OLD "
-                "quantizer besides. The pre-swap bytes are preserved "
-                "under the _tomb_* directories; run ann_index_recover to "
-                "roll back losslessly, re-ingest the racing batch, then "
-                "re-run."
-            )
+        _swap_in(mt, rows, _race_window_hook)
         # COMMIT: the new manifest (new model, epoch+1). Before this
         # line recovery rolls the layout back and the old manifest stays
         # authoritative; after it the rebuilt layout is the index.
         write_index_manifest(spark, root, new_manifest)
         _fs_write_bytes(spark, f"{root}/{_TOMB_SWAPPED_SENTINEL}", b"{}")
-        for d in _root_dirs(("_tomb_",)):
+        for d in _root_dirs(fs, JPath, root, ("_tomb_",)):
             fs.delete(d, True)
 
         if kind == "lsh" and bool(manifest.get("quantized", False)):
@@ -4095,8 +4015,9 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
             if fs.exists(JPath(qroot)):
                 fs.rename(JPath(qroot), JPath(qtomb))
             _write_lsh_quantized(
-                corpus, root, dim=dim, id_col=id_col, vec_col=vec_col,
-                qbatch="rebuild", mode="overwrite",
+                corpus, root, dim=common["dim"], id_col=common["id_col"],
+                vec_col=common["vec_col"], qbatch="rebuild",
+                mode="overwrite",
             )
             fs.delete(JPath(qtomb), True)
 
@@ -4105,28 +4026,24 @@ def ann_index_rebuild(spark, index_path: str, corpus=None, *,
         # otherwise leave old-epoch markers that read as a FALSE stale
         # alarm — while the sentinels exist, recover's roll-forward
         # consumes exactly these markers instead
-        log_root = f"{root}/{_APPEND_LOG_DIR}"
-        for name in markers_before:
-            fs.delete(JPath(f"{log_root}/{name}"), False)
+        for name in mt.markers_before:
+            fs.delete(JPath(f"{root}/{_APPEND_LOG_DIR}/{name}"), False)
         fs.delete(JPath(f"{root}/{_TOMB_STAGED_SENTINEL}"), False)
         fs.delete(JPath(f"{root}/{_TOMB_SWAPPED_SENTINEL}"), False)
 
         n_files_out = len([
             f
-            for d in _root_dirs((f"{part_col}=",))
+            for d in _root_dirs(fs, JPath, root, (f"{mt.part_col}=",))
             for f in list_data_files(spark, d.toString())
         ])
         return {
             "kind": kind,
-            "epoch": epoch + 1,
-            "n_batch_dirs_folded": n_batch_dirs,
+            "epoch": mt.epoch + 1,
+            "n_batch_dirs_folded": mt.n_batch_dirs,
             "n_files_out": n_files_out,
             "seed": seed_new,
             "drift_reference_refreshed": bool(drift_reference),
         }
-    finally:
-        fs.delete(JPath(f"{root}/{_MAINT_LOCK}"), False)
-
 
 
 def ann_index_recover(spark, index_path: str) -> dict:
@@ -4257,10 +4174,7 @@ def ann_index_recover(spark, index_path: str) -> dict:
             manifest_healed += 1
 
     if fs.exists(jroot):
-        tombs = [
-            st.getPath() for st in fs.listStatus(jroot)
-            if st.isDirectory() and st.getPath().getName().startswith("_tomb_")
-        ]
+        tombs = _root_dirs(fs, JPath, root, ("_tomb_",))
         visible_data = [
             st.getPath().getName() for st in fs.listStatus(jroot)
             if st.isDirectory() and "=" in st.getPath().getName()
@@ -4335,23 +4249,15 @@ def ann_index_recover(spark, index_path: str) -> dict:
             m = read_index_manifest(spark, root)
             if m is not None and int(m.get("epoch", 0)) == int(
                     sentinel["epoch"]):
-                bumped = {
-                    k: v for k, v in dict.items(m)
-                    if not k.startswith("_")
-                }
-                for payload, (pointer, _) in _SIDECAR_KEYS.items():
-                    if bumped.get(pointer):
-                        bumped.pop(payload, None)
-                bumped["epoch"] = int(sentinel["epoch"]) + 1
-                write_index_manifest(spark, root, bumped)
+                _write_bumped_manifest(spark, root, m,
+                                       int(sentinel["epoch"]) + 1)
                 epoch_finished = 1
         for sentinel_name in (_TOMB_STAGED_SENTINEL, _TOMB_SWAPPED_SENTINEL):
             fs.delete(JPath(f"{root}/{sentinel_name}"), False)
     staging_removed = 0
-    for stage in (f"{root}__compact_stage", f"{root}__compact_qstage",
-                  f"{root}__rebuild_stage"):
-        if fs.exists(JPath(stage)):
-            fs.delete(JPath(stage), True)
+    for suffix in _STAGE_SUFFIXES:
+        if fs.exists(JPath(root + suffix)):
+            fs.delete(JPath(root + suffix), True)
             staging_removed += 1
     lock_cleared = int(bool(fs.delete(JPath(f"{root}/{_MAINT_LOCK}"), False)))
     # r17 (r16 advisor #1): a rolled-back rebuild leaves the generation
@@ -4423,11 +4329,11 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
     kind = manifest.get("kind")
     epoch = int(manifest.get("epoch", 0))
     root = manifest.get("_root", index_path).rstrip("/")
-    if kind not in ("lsh", "ivf", "ivfpq"):
+    if kind not in _INDEX_KINDS:
         problems.append(f"unknown index kind {kind!r}")
         return {"ok": False, "kind": kind, "epoch": epoch,
                 "problems": problems, "checks": checks}
-    part_col = "table" if kind == "lsh" else "cell"
+    part_col, _, need, range_key = _index_kind(manifest)
     id_col = manifest.get("id_col", "vec_id")
 
     fs, JPath = _hadoop_fs(spark, root)
@@ -4446,10 +4352,9 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
             tomb_data_debris = any(
                 fs.listStatus(JPath(f"{root}/{t}")) for t in tombs
             )
-        for stage in (f"{root}__compact_stage", f"{root}__compact_qstage",
-                      f"{root}__rebuild_stage"):
-            if fs.exists(JPath(stage)):
-                problems.append(f"leftover staging dir {stage}")
+        for suffix in _STAGE_SUFFIXES:
+            if fs.exists(JPath(root + suffix)):
+                problems.append(f"leftover staging dir {root + suffix}")
         for sentinel in (_TOMB_STAGED_SENTINEL, _TOMB_SWAPPED_SENTINEL):
             if fs.exists(JPath(f"{root}/{sentinel}")):
                 problems.append(
@@ -4490,19 +4395,17 @@ def ann_index_verify(spark, index_path: str, *, deep: bool = False) -> dict:
     if not tomb_data_debris and (
             not problems or (checks.get("n_built_dirs") or
                              checks.get("n_batch_dirs"))):
-        df = _read_index_root(spark, root, part_col)
-        need = {
-            "lsh": {"table", "bucket", id_col},
-            "ivf": {"cell", id_col, manifest.get("vec_col", "embedding")},
-            "ivfpq": {"cell", id_col, manifest.get("vec_col", "embedding"),
-                      "pq_code"},
-        }[kind]
-        missing = need - set(df.columns)
+        try:
+            df = _read_index_root(spark, root, part_col,
+                                  caller="ann_index_verify")
+        except RuntimeError as ex:  # diverging mixed layout: report it
+            problems.append(str(ex))
+            df = None
+        missing = need - set(df.columns) if df is not None else set()
         if missing:
             problems.append(f"missing columns {sorted(missing)}")
-        else:
-            n_parts = manifest.get(
-                "n_cells" if kind != "lsh" else "n_tables")
+        elif df is not None:
+            n_parts = manifest.get(range_key)
             if n_parts is not None:
                 mx = df.agg(F.max(part_col)).first()[0]
                 checks[f"max_{part_col}"] = mx
@@ -4700,13 +4603,8 @@ def ivf_probe_indexed_batch(emb: DataFrame, index_path: str,
         )
         dim = _resolved(manifest, "dim", dim)
     if centroids is None:
-        if manifest is None or manifest.get("centroids") is None:
-            raise ValueError(
-                "ivf_probe_indexed_batch: centroids not given and no "
-                f"manifest at {index_path} — build with ivf_build_index "
-                "(r13+) or pass centroids explicitly"
-            )
-        centroids = np.asarray(manifest["centroids"], dtype=np.float64)
+        centroids = _manifest_centroids(manifest, index_path,
+                                        "ivf_probe_indexed_batch")
     if rescore not in ("auto", "int8", "float"):
         raise ValueError(
             f"ivf_probe_indexed_batch: unknown rescore={rescore!r}")

@@ -2205,16 +2205,19 @@ def test_pq_ksub_over_128_raises(spark, tmp_path):
     pq_encode_rows(emb, ok_books)  # plan construction succeeds
 
 
-def test_compact_mixed_layout_column_divergence_raises(spark, tmp_path):
+@pytest.mark.parametrize("verb", ["compact", "rebuild"])
+def test_compact_mixed_layout_column_divergence_raises(spark, tmp_path, verb):
     """r15 (r14 advisor): a mixed build+batch root whose two depth
     groups disagree on the data columns refuses to compact (a rewrite
     would silently drop the difference) instead of deriving the schema
-    from one group."""
+    from one group. A path-only rebuild reads the same snapshot through
+    the same reader and refuses too (it used to rebuild the index
+    without the built dirs' extra column)."""
     from pyspark.sql import functions as F
 
     from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators import similarity
     from dask_hivemetastore_spark.operators.similarity import (
-        ann_index_compact,
         ivf_append,
         ivf_assign_full,
         ivf_manifest,
@@ -2239,7 +2242,131 @@ def test_compact_mixed_layout_column_divergence_raises(spark, tmp_path):
     ivf_append(emb.where(F.col("vec_id") % 7 == 0),
                f"{idx}/ingest_batch=0", mode="overwrite")
     with pytest.raises(RuntimeError, match="column sets diverge"):
-        ann_index_compact(spark, idx)
+        getattr(similarity, f"ann_index_{verb}")(spark, idx)
+
+
+def test_verify_reports_mixed_layout_column_divergence(spark, tmp_path):
+    """ann_index_verify is an fsck: a mixed root whose depth groups
+    disagree on the data columns (the state compact and rebuild refuse)
+    is reported as a problem, not raised."""
+    from pyspark.sql import functions as F
+
+    from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators.similarity import (
+        ann_index_verify,
+        ivf_append,
+        ivf_build_index,
+    )
+    from .conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    idx = str(tmp_path / "verify_diverge")
+    ivf_build_index(emb, idx, n_cells=4, dim=64, drift_reference=False)
+    assert ann_index_verify(spark, idx)["ok"]
+    # the batch dirs carry a column the built dirs lack
+    ivf_append(emb.where(F.col("vec_id") % 7 == 0)
+               .withColumn("extra_meta", F.lit(1)),
+               f"{idx}/ingest_batch=0", mode="overwrite")
+    rep = ann_index_verify(spark, idx)
+    assert not rep["ok"]
+    assert rep["checks"]["mixed_layout"]
+    assert any("column sets diverge" in p for p in rep["problems"]), rep
+
+
+@pytest.mark.parametrize("kind,opts", [
+    ("ivf", {}),
+    ("ivf", {"int8_cols": True}),
+    ("ivfpq", {}),
+    ("ivfpq", {"residual": True}),
+], ids=["ivf", "ivf-int8", "ivfpq", "ivfpq-residual"])
+def test_rebuild_equals_fresh_build(spark, tmp_path, kind, opts):
+    """A rebuild over a corpus equals a fresh uncached build over the
+    same corpus with the same config: the rebuild retrains through the
+    builds' own model step. Rows equal across all columns (order-
+    insensitive); manifests equal once the epoch and the sidecar
+    pointers are set aside (the drift reference to float rounding —
+    its sums aggregate in shuffle order)."""
+    from pyspark.sql import functions as F
+
+    from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators.similarity import (
+        _SIDECAR_KEYS,
+        ann_index_rebuild,
+        ivf_build_index,
+        ivfpq_build_index,
+        read_index_manifest,
+    )
+    from .conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    corpus = emb.where(F.col("vec_id") % 3 != 0)
+    build = ivf_build_index if kind == "ivf" else ivfpq_build_index
+    cfg = {"n_cells": 4, "dim": 64, "cache_key": None, **opts}
+    if kind == "ivfpq":
+        cfg.update(m=16, ksub=32)
+    idx, ref = str(tmp_path / "rebuilt"), str(tmp_path / "fresh")
+    # the index starts from other rows, so only the rebuild brings corpus in
+    build(emb.where(F.col("vec_id") % 3 == 0), idx, **cfg)
+    ann_index_rebuild(spark, idx, corpus=corpus)
+    build(corpus, ref, **cfg)
+
+    got = spark.read.parquet(idx)
+    want = spark.read.parquet(ref)
+    assert sorted(got.columns) == sorted(want.columns)
+    want = want.select(*got.columns)
+    assert got.count() == want.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+    pointers = {ptr for ptr, _ in _SIDECAR_KEYS.values()}
+
+    def payload(path):
+        m = read_index_manifest(spark, path)
+        keys = (set(dict.keys(m)) | set(_SIDECAR_KEYS)) - pointers
+        return {k: m.get(k) for k in keys
+                if k != "epoch" and not k.startswith("_")}
+
+    got_m, want_m = payload(idx), payload(ref)
+    assert int(read_index_manifest(spark, idx)["epoch"]) == 1
+    got_drift, want_drift = got_m.pop("drift"), want_m.pop("drift")
+    assert got_m == want_m
+    assert got_drift == pytest.approx(want_drift, rel=1e-9, nan_ok=True)
+
+
+def test_path_only_rebuild_independent_of_file_layout(spark, tmp_path):
+    """A path-only rebuild retrains on the index's resident rows; the
+    model must be a function of those rows, not of how they are split
+    into files (a multi-file root reads in file-listing order, and the
+    KMeans fit depends on its input order). The same rows written as
+    one file per cell and as several must rebuild to the same
+    centroids."""
+    import numpy as np
+
+    from dask_hivemetastore_spark.catalog import load_table
+    from dask_hivemetastore_spark.operators.similarity import (
+        ann_index_rebuild,
+        ivf_assign_full,
+        ivf_manifest,
+        ivf_train_centroids,
+        read_index_manifest,
+        write_index_manifest,
+    )
+    from .conftest import SF_SMOKE
+
+    emb = load_table(spark, SF_SMOKE, "embeddings")
+    C = ivf_train_centroids(emb, n_cells=4, dim=64)
+    rows = ivf_assign_full(emb, C, "embedding", dim=64)
+    manifest = ivf_manifest(emb, C, dim=64, n_cells=4, seed=42,
+                            drift_reference=False)
+    rebuilt = []
+    for n_files in (1, 5):
+        idx = str(tmp_path / f"files{n_files}")
+        rows.repartition(n_files).write.partitionBy("cell").parquet(idx)
+        write_index_manifest(spark, idx, manifest)
+        ann_index_rebuild(spark, idx, seed=7)
+        rebuilt.append(np.asarray(
+            read_index_manifest(spark, idx)["centroids"], dtype=np.float64))
+    assert np.array_equal(rebuilt[0], rebuilt[1])
 
 
 def test_hybrid_fusion_identical_over_ivf_batch_arm(spark, tmp_path):
@@ -2312,13 +2439,17 @@ def test_hybrid_fusion_identical_over_ivf_batch_arm(spark, tmp_path):
 def test_ann_crash_anywhere_recovery_soak(spark, tmp_path, seed, monkeypatch):
     """r15 crash-anywhere soak: over a randomized append/compact
     lifecycle on an IVFPQ index (the family whose probes do NOT
-    dropDuplicates — the r14 advisor's exposure), every compaction may
+    dropDuplicates — the r14 advisor's exposure), every maintenance
+    step (a compaction or a path-only rebuild, picked at random) may
     crash at either injection point (the pre-swap re-list: staging
     written, nothing tombstoned; or the post-swap re-list: swap done,
-    commit sentinel not yet written). After every crash,
-    ann_index_recover must restore EXACT pre-crash probe results and a
-    clean ann_index_verify, and the re-run compaction must succeed —
-    the property the three single-shot crash pins sample, soaked."""
+    commit sentinel not yet written) — a rebuild also at its
+    swapped-sentinel write, after its manifest commit (recover rolls
+    forward). After every crash, ann_index_recover must restore EXACT
+    pre-crash probe results (the probe config is exhaustive, so a
+    retrained model answers the same) and a clean ann_index_verify, and
+    the re-run pass must succeed — the property the single-shot crash
+    pins sample, soaked."""
     import random
 
     import numpy as np
@@ -2328,6 +2459,7 @@ def test_ann_crash_anywhere_recovery_soak(spark, tmp_path, seed, monkeypatch):
     from dask_hivemetastore_spark.operators import similarity
     from dask_hivemetastore_spark.operators.similarity import (
         ann_index_compact,
+        ann_index_rebuild,
         ann_index_recover,
         ann_index_verify,
         finite_vectors,
@@ -2365,8 +2497,9 @@ def test_ann_crash_anywhere_recovery_soak(spark, tmp_path, seed, monkeypatch):
             cur, 0, k=8, dim=64).collect()]
 
     real = similarity._list_append_markers
+    real_wb = similarity._fs_write_bytes
 
-    def compact_with_crash(crash_at):
+    def maintain_with_crash(verb, crash_at):
         calls = {"n": 0}
 
         def crashing(spark_, root):
@@ -2375,12 +2508,22 @@ def test_ann_crash_anywhere_recovery_soak(spark, tmp_path, seed, monkeypatch):
                 raise RuntimeError("soak crash")
             return real(spark_, root)
 
-        monkeypatch.setattr(similarity, "_list_append_markers", crashing)
+        def crash_on_swapped(spark_, path, data):
+            if path.endswith("_tomb_swapped.json"):
+                raise RuntimeError("soak crash")
+            return real_wb(spark_, path, data)
+
+        if crash_at == "swapped":
+            monkeypatch.setattr(similarity, "_fs_write_bytes",
+                                crash_on_swapped)
+        else:
+            monkeypatch.setattr(similarity, "_list_append_markers", crashing)
         try:
             with pytest.raises(RuntimeError, match="soak crash"):
-                ann_index_compact(spark, pidx)
+                verb(spark, pidx)
         finally:
             monkeypatch.setattr(similarity, "_list_append_markers", real)
+            monkeypatch.setattr(similarity, "_fs_write_bytes", real_wb)
 
     assert probe() == brute()
     next_slice = 1
@@ -2396,18 +2539,28 @@ def test_ann_crash_anywhere_recovery_soak(spark, tmp_path, seed, monkeypatch):
             ingested.append(next_slice)
             next_slice += 1
         else:
+            name = rng.choice(["compact", "rebuild"])
+            verb = ann_index_compact if name == "compact" else ann_index_rebuild
             want = probe()
-            crash = rng.choice([None, 3, 4])  # pre-swap / post-swap re-list
+            # pre-swap / post-swap re-list; for a rebuild also the
+            # swapped-sentinel write, which follows its manifest commit
+            crash = rng.choice([None, 3, 4]
+                               + (["swapped"] if name == "rebuild" else []))
             if crash is not None:
-                compact_with_crash(crash)
+                maintain_with_crash(verb, crash)
                 stats = ann_index_recover(spark, pidx)
-                assert (stats["recovered"] + stats["staging_removed"]
-                        + stats["staged_removed"]) > 0, (crash, stats)
-                assert probe() == want, ("post-recover", crash)
+                if crash == "swapped":  # past the commit: roll forward
+                    assert stats["rolled_forward"] > 0, (name, stats)
+                    assert stats["recovered"] == 0, (name, stats)
+                else:
+                    assert (stats["recovered"] + stats["staging_removed"]
+                            + stats["staged_removed"]) > 0, (
+                        name, crash, stats)
+                assert probe() == want, ("post-recover", name, crash)
                 rep = ann_index_verify(spark, pidx)
                 assert rep["ok"], rep
-            ann_index_compact(spark, pidx)
-            assert probe() == want, "post-compact"
+            verb(spark, pidx)
+            assert probe() == want, f"post-{name}"
         assert probe() == brute()
         rep = ann_index_verify(spark, pidx)
         assert rep["ok"], rep
