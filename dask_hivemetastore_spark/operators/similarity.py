@@ -162,63 +162,6 @@ def knn_topk(emb: DataFrame, query_id: int, k: int = 10,
     )
 
 
-def knn_topk_arrow(emb: DataFrame, query_id: int, k: int = 10,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   dim: int | None = None, overfetch: int = 40) -> DataFrame:
-    """Brute-force cosine top-k, Arrow/NumPy variant of :func:`knn_topk`
-    — BASELINE.md's sanctioned fallback for the knn bench cell, pre-armed
-    per VERDICT r10 #3 so a swap is a one-line flip with committed A/B
-    evidence (scripts/ab_knn_brute.py; PERF.md r11).
-
-    Same plan shape as the JVM path (broadcast 1-row query, no corpus
-    shuffle, TakeOrderedAndProject) but the dot product runs as one
-    vectorized ``vecs @ qv`` GEMV per Arrow batch instead of the
-    whole-stage-codegen ``aggregate``/``zip_with`` fold. Result contract
-    is IDENTICAL to :func:`knn_topk`: NumPy's pairwise-summed float64
-    dots decide only a k+``overfetch`` SHORTLIST (reassociation drift vs
-    the sequential fold is ~1 ulp — ``overfetch`` absorbs any boundary
-    swap), then the exact JVM-fold rescore of those rows produces the
-    emitted cosines, bit-identical to the oracle's ``list_sum``."""
-    src = finite_vectors(emb, vec_col, dim)
-    q = src.where(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("__qv")
-    )
-
-    def dots(batches):
-        qv = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if qv is None:
-                qv = np.asarray(pdf["__qv"].iloc[0], dtype=np.float64)
-            vecs = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            yield pd.DataFrame({id_col: pdf[id_col], "__d": vecs @ qv})
-
-    cand = (
-        src.where(F.col(id_col) != query_id)
-        .select(id_col, vec_col)
-        .crossJoin(F.broadcast(q))
-        .mapInPandas(dots, f"{id_col} long, __d double")
-        .transform(lambda d: _finite(d, "__d"))
-        .orderBy(F.desc("__d"), F.asc(id_col))
-        .limit(k + overfetch)
-        .select(id_col)
-    )
-    return (
-        src.join(F.broadcast(cand), id_col)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col, "label",
-            F.round(dot_f64(F.col(vec_col), F.col("__qv")), 6).alias("cosine"),
-        )
-        .transform(_finite)
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
-
-
 def similar_pairs(emb: DataFrame, threshold: float,
                   id_col: str = "vec_id", vec_col: str = "embedding",
                   n_blocks: int | None = None,
@@ -2296,10 +2239,10 @@ def ivf_append(new_emb: DataFrame, index_path: str,
 #: mean assignment cosine drops more than the threshold below the
 #: reference corpus's value — i.e. when the FIXED quantizer stops
 #: fitting the arriving data.
-#: Margin measured on the fixture (scripts/stress_ivf_scale.py drift
-#: arm): an in-distribution control batch moves the mean by under
-#: +/-0.02 while an offset-and-renormalized shifted batch (alpha=2)
-#: drops it ~0.10-0.12 — the rule separates them with >2x margin on
+#: Margin measured on the fixture (PERF.md r12, "IVF centroid drift"):
+#: an in-distribution control batch moves the mean by under +/-0.02
+#: while an offset-and-renormalized shifted batch (alpha=2) drops it
+#: ~0.10-0.12 — the rule separates them with >2x margin on
 #: both sides. Occupancy concentration (max cell share, also returned
 #: by ivf_drift_stats) is deliberately NOT part of the per-batch flag:
 #: a topically-coherent batch legitimately lands in one cell (pinned in
@@ -2972,8 +2915,8 @@ def pq_topk_reranked(emb: DataFrame, query_id: int, k: int = 10,
     ``shortlist`` must SCALE WITH THE CORPUS (≈1% of N), not stay a
     constant: measured on 50 k isotropic random vectors (the adversarial
     near-equidistant case for any ANN), recall@10 is 0.46 at shortlist 50
-    but 0.94 at 500 (1%) and 1.00 at 2000 — the curve is in
-    ``scripts/stress_knn.py`` / PERF.md. Real embedding corpora cluster,
+    but 0.94 at 500 (1%) and 1.00 at 2000 — the curve is in PERF.md
+    (round 6, the 100x stress_knn run). Real embedding corpora cluster,
     which only helps.
     """
     books = pq_train_codebooks(emb, m=m, ksub=ksub, id_col=id_col,

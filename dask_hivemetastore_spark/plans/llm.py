@@ -408,7 +408,7 @@ def knn_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded shortlist via a PUSHED ``In(vec_id, …)`` literal filter
     (plan-pinned) — identical rows, measured faster wall AND ~2000×
     fewer scanned float bytes at the 100× stress
-    (scripts/stress_lsh_scale.py, PERF.md r13)."""
+    (PERF.md r13, "LSH indexed probe: INT8 screen + exact rerank")."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = scratch_dir("lshidx_") + "/postings"
     similarity.lsh_build_index(
@@ -964,7 +964,7 @@ def quality_calibrate_prefiltered(spark: SparkSession,
     one task: the windowed set shrinks to ≈ 20 % of the hot source +
     approximation slack. Output identity with the plain window is
     pinned in tests/test_curation.py; the measured skew datapoint is
-    scripts/stress_calibrate_skew.py (PERF.md r14)."""
+    in PERF.md r14 ("Per-source calibration skew path")."""
     docs = load_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
@@ -1863,7 +1863,7 @@ def ivf_drift_check(spark: SparkSession, sf_dir: str) -> DataFrame:
       (quantizer-FIT rule; batch occupancy is reported but never
       flags — a coherent batch legitimately concentrates, pinned in
       tests/test_operators.py; margins measured in
-      scripts/stress_ivf_scale.py's drift arm and pinned in
+      PERF.md r12 ("IVF centroid drift") and pinned in
       tests/test_hostile_embeddings.py).
 
     Threshold (r13, VERDICT r12 next #3): PER-INDEX, not the global

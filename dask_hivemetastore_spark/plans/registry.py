@@ -65,8 +65,11 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #: this cache instead of recomputing. That is correct (same session,
 #: same inputs ⇒ same result) and irrelevant to the driver's protocol
 #: (fresh session per run), but a caller wanting forced recomputation
-#: in-session must clearCache() or disable the memo/persist env flags.
-_AUDIT_PERSISTED: list[DataFrame] = []
+#: in-session must call spark.catalog.clearCache(). Because a repeat
+#: shares that one CacheManager entry, the FIFO holds each semantic plan
+#: once: a re-persist moves it to the newest slot, so evicting an older
+#: duplicate can never unpersist the cache a newer caller relies on.
+_AUDIT_PERSISTED: list[tuple[int, DataFrame]] = []
 _AUDIT_PERSIST_CAP = 64
 
 
@@ -77,17 +80,18 @@ def audit_persist(df: DataFrame) -> DataFrame:
     reach the cache's build plan through the InMemoryRelation walk
     (scripts/plan_metrics.py — the dedup_near precedent). The frames are
     k-row/pair-set bounded, so cache memory is trivial, and a bounded
-    FIFO evicts the oldest persists in long-lived sessions (r18).
-    ``SPARK_GRAFT_AUDIT_PERSIST=0`` disables it (A/B harness).
+    FIFO evicts the oldest persists in long-lived sessions (r18): it keeps
+    the ``_AUDIT_PERSIST_CAP`` most recently persisted distinct plans.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_AUDIT_PERSIST", "1") == "0":
-        return df
     df = df.persist()
-    _AUDIT_PERSISTED.append(df)
+    key = df.semanticHash()
+    for i, (h, old) in enumerate(_AUDIT_PERSISTED):
+        if h == key and old.sameSemantics(df):
+            del _AUDIT_PERSISTED[i]
+            break
+    _AUDIT_PERSISTED.append((key, df))
     while len(_AUDIT_PERSISTED) > _AUDIT_PERSIST_CAP:
-        old = _AUDIT_PERSISTED.pop(0)
+        _, old = _AUDIT_PERSISTED.pop(0)
         try:
             old.unpersist()
         except Exception:  # noqa: BLE001 — session may already be stopped
@@ -107,8 +111,8 @@ def verify_enabled() -> bool:
     at 100 TB it is the difference between a sketch query (one scan,
     fixed-size state) and a second exact scan. Default ON — the
     registered contract and every driver row are unchanged — and the
-    perf sweep / A/B harness (scripts/ab_verify_overhead.py) flips
-    ``SPARK_GRAFT_VERIFY=0`` to measure the sketch-only serving cost.
+    perf sweep flips ``SPARK_GRAFT_VERIFY=0`` to measure the sketch-only
+    serving cost (PERF.md r12, "Derived-verdict overhead A/B").
     With the flag off the verdict/exact columns emit NULL (same schema,
     no oracle validity)."""
     import os

@@ -39,6 +39,7 @@ from contextlib import contextmanager
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamReader
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -84,19 +85,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # glob path on purpose: for a non-glob path FileStreamSource force-sets
     # basePath to the (file) path itself, which partition discovery rejects;
     # a glob keeps our explicit directory basePath in effect
-    raw = spark.readStream.schema(batch.schema).option("basePath", sf_dir)
-    # Micro-batch chunking knob (r10): with it unset, a finite fixture
-    # drains in ONE availableNow batch and the multi-batch state machine
-    # (watermark advancement, state carry, late-row eviction) never runs.
-    # tests/test_stream_batching.py splits events.parquet into K part
-    # files and sets this to 1, driving every registered streaming key
-    # through real micro-batch boundaries — the production shape, where
-    # data arrives incrementally. Semantics must be boundary-invariant
-    # (that is what the gate asserts), so the knob is safe to expose.
-    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if mft:
-        raw = raw.option("maxFilesPerTrigger", int(mft))
-    raw = raw.parquet(f"{sf_dir}/events.parque[t]")
+    raw = _max_files(
+        spark.readStream.schema(batch.schema).option("basePath", sf_dir)
+    ).parquet(f"{sf_dir}/events.parque[t]")
     return raw.select(
         "event_id",
         ts_expr.alias("ts"),
@@ -105,6 +96,23 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "props",
     )
+
+
+def _max_files(reader: DataStreamReader) -> DataStreamReader:
+    """Apply the micro-batch chunking knob (r10) to a file-stream reader.
+
+    With ``SPARK_GRAFT_STREAM_MAX_FILES`` unset, a finite fixture drains
+    in ONE availableNow batch and the multi-batch state machine
+    (watermark advancement, state carry, late-row eviction) never runs.
+    tests/test_stream_batching.py splits the fixture into K part files
+    and sets this to 1, driving every registered streaming key through
+    real micro-batch boundaries — the production shape, where data
+    arrives incrementally. Semantics must be boundary-invariant (that is
+    what the gate asserts), so the knob is safe to expose. Read at call
+    time, so a test's ``monkeypatch.setenv`` takes effect.
+    """
+    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
+    return reader.option("maxFilesPerTrigger", int(mft)) if mft else reader
 
 
 def stream_shuffle_partitions(spark: SparkSession, *paths: str) -> int:
@@ -127,10 +135,8 @@ def stream_shuffle_partitions(spark: SparkSession, *paths: str) -> int:
     ``spark.sql.shuffle.partitions``] — locally that floors at 4; at
     cluster scale the byte term exceeds the clamp and the session
     (cluster-sized) value is returned unchanged, so this is a pure
-    local-overhead fix with no production behavior change.
-    ``SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS`` overrides (A/B harness +
-    deployments that size state partitions explicitly). Paths on remote
-    stores (no local stat) fall back to the session value.
+    local-overhead fix with no production behavior change. Paths on
+    remote stores (no local stat) fall back to the session value.
 
     Applies to JVM-stateful streams only (windowed/keyed aggs, stream
     joins, dropDuplicates): their per-group work is negligible and the
@@ -141,9 +147,6 @@ def stream_shuffle_partitions(spark: SparkSession, *paths: str) -> int:
     session count) — those use :func:`stream_python_state_partitions`.
     """
     sess = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, min(sess, int(env)))
     total = 0
     for p in paths:
         lp = p[len("file:"):] if p.startswith("file:") else p
@@ -173,13 +176,10 @@ def stream_python_state_partitions(spark: SparkSession, *paths: str) -> int:
     a vanilla 200-partition session over a 2 MB source runs 200 state
     stores for work 32 cores finish in parallel (measured: the driver-sim
     vanilla session ran stream_sessionize 27.5 s at 200 state partitions
-    vs ~4 s at 32). Same env override + remote-path fallback as
+    vs ~4 s at 32). Same remote-path fallback as
     :func:`stream_shuffle_partitions`.
     """
     sess = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
-    if env:
-        return max(1, min(sess, int(env)))
     cores = int(spark.sparkContext.defaultParallelism)
     derived = stream_shuffle_partitions(spark, *paths)
     return max(1, min(sess, max(cores, derived)))
@@ -1038,11 +1038,9 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     batch_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    raw = spark.readStream.schema(batch_schema).option("basePath", sf_dir)
-    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if mft:
-        raw = raw.option("maxFilesPerTrigger", int(mft))
-    stream = raw.parquet(f"{sf_dir}/embeddings.parque[t]")
+    stream = _max_files(
+        spark.readStream.schema(batch_schema).option("basePath", sf_dir)
+    ).parquet(f"{sf_dir}/embeddings.parque[t]")
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         # batch-id-keyed subdirectory + overwrite = replay-idempotent;
@@ -1135,11 +1133,9 @@ def stream_lsh_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     batch_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    raw = spark.readStream.schema(batch_schema).option("basePath", sf_dir)
-    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if mft:
-        raw = raw.option("maxFilesPerTrigger", int(mft))
-    stream = raw.parquet(f"{sf_dir}/embeddings.parque[t]")
+    stream = _max_files(
+        spark.readStream.schema(batch_schema).option("basePath", sf_dir)
+    ).parquet(f"{sf_dir}/embeddings.parque[t]")
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         similarity.lsh_append(  # config from the root manifest
@@ -1235,11 +1231,9 @@ def stream_ivfpq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     batch_schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    raw = spark.readStream.schema(batch_schema).option("basePath", sf_dir)
-    mft = os.environ.get("SPARK_GRAFT_STREAM_MAX_FILES")
-    if mft:
-        raw = raw.option("maxFilesPerTrigger", int(mft))
-    stream = raw.parquet(f"{sf_dir}/embeddings.parque[t]")
+    stream = _max_files(
+        spark.readStream.schema(batch_schema).option("basePath", sf_dir)
+    ).parquet(f"{sf_dir}/embeddings.parque[t]")
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         similarity.ivfpq_append(  # artifacts from the root manifest

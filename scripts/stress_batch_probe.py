@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Batched vs looped index probes at 100x corpus scale (r13).
 
-Companion to scripts/stress_compact.py: 200 000 vectors, one-shot
-indexes (LSH postings 16x8-bit + INT8 sidecar; IVF 16 cells), then a
-Q-query workload served two ways — a single-probe loop (Q pruned scans,
+Same 100x corpus as the ann_index_compact stress (PERF.md r13):
+200 000 vectors, one-shot indexes (LSH postings 16x8-bit + INT8
+sidecar; IVF 16 cells), then a Q-query workload served two ways — a single-probe loop (Q pruned scans,
 Q shortlist jobs) and the batched probe (ONE scan, one screen, one
 rescore). Invariants wired into the exit code:
 

@@ -78,7 +78,8 @@ def main() -> int:
 
     # ~1M update-mode emissions accumulate in the single local JVM's
     # memory sink, beside the state store and its maintenance snapshots —
-    # provision heap up front (same note as stress_stream_dedup: at
+    # provision heap up front (same note as PERF.md r10's stream-dedup
+    # stress: at
     # production scale this is executor memory × shard count, and the
     # sink is a real table, not memory)
     spark = get_spark(

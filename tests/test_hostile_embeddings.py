@@ -192,6 +192,29 @@ def test_ivf_on_hostile_corpus_properties(spark, hostile_emb_dir):
     assert recall >= 0.5, (recall, [r.vec_id for r in ivf], brute)
 
 
+def test_exclusion_accounting_exact_on_hostile_corpus(spark, hostile_emb_dir,
+                                                     tmp_path):
+    """Exclusion accounting: ``finite_vectors`` and a built IVF index
+    keep every eligible row and drop exactly the poisoned ones — the
+    eligible count is the corpus minus the eight corrupt ids (the zero
+    vector and the large-but-finite vector are legal and stay)."""
+    from dask_hivemetastore_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{hostile_emb_dir}/embeddings.parquet")
+    corrupt_ids = {10, 11, 12, 20, 21, 22, 31, 32}
+    all_ids = {r.vec_id for r in emb.select("vec_id").collect()}
+    eligible = [r.vec_id for r in similarity.finite_vectors(
+        emb, "embedding", DIM).select("vec_id").collect()]
+    assert sorted(eligible) == sorted(all_ids - corrupt_ids)
+
+    idx = str(tmp_path / "ivf")
+    similarity.ivf_build_index(emb, idx, n_cells=16, dim=DIM,
+                               drift_reference=False)
+    indexed = [r.vec_id for r in
+               spark.read.parquet(idx).select("vec_id").collect()]
+    assert sorted(indexed) == sorted(eligible)
+
+
 def test_planted_duplicate_still_found(spark, hostile_emb_dir):
     """The gate must not only exclude garbage — the legitimate planted
     exact-duplicate pair (vec 2 ≡ vec 9000, cosine 1.0) must survive all
@@ -275,24 +298,6 @@ def test_raw_lsh_path_survives_corruption(spark, hostile_emb_dir):
         ).collect()
         assert 0 < len(lsh) <= 10, n_tables
         assert all(np.isfinite(r.cosine) for r in lsh), n_tables
-
-
-def test_arrow_knn_variant_identical_on_hostile_corpus(spark,
-                                                       hostile_emb_dir):
-    """The pre-armed Arrow/NumPy brute-force variant (r11) must equal the
-    JVM path row-for-row ON THE POISONED CORPUS too: its eligibility
-    filter runs before np.stack (a ragged/NaN batch would crash or poison
-    the GEMV), and the exact rescore pins values. This is the fallback's
-    license to ever be flipped in."""
-    from dask_hivemetastore_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{hostile_emb_dir}/embeddings.parquet")
-    jvm = [(r.vec_id, r.label, r.cosine) for r in
-           similarity.knn_topk(emb, query_id=0, k=10, dim=DIM).collect()]
-    arrow = [(r.vec_id, r.label, r.cosine) for r in
-             similarity.knn_topk_arrow(emb, query_id=0, k=10,
-                                       dim=DIM).collect()]
-    assert jvm == arrow
 
 
 def test_ivf_ingest_keys_on_hostile_corpus_properties(spark,

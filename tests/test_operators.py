@@ -82,25 +82,6 @@ def test_knn_self_similarity(spark, sf_dir):
     assert self_dot == pytest.approx(1.0, abs=1e-5)
 
 
-def test_knn_arrow_variant_identical_to_jvm(spark, sf_dir):
-    """The pre-armed Arrow/NumPy knn fallback (r11, VERDICT r10 #3) must
-    return EXACTLY the JVM path's rows — the GEMV shortlist only decides
-    candidates, the exact JVM-fold rescore decides values and order, so a
-    divergence means the overfetch stopped absorbing rank drift."""
-    from dask_hivemetastore_spark.catalog import load_table
-    from dask_hivemetastore_spark.operators.similarity import (
-        knn_topk, knn_topk_arrow,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    for qid in (0, 7):
-        jvm = [(r.vec_id, r.label, r.cosine)
-               for r in knn_topk(emb, qid, k=10, dim=64).collect()]
-        arrow = [(r.vec_id, r.label, r.cosine)
-                 for r in knn_topk_arrow(emb, qid, k=10, dim=64).collect()]
-        assert jvm == arrow, qid
-
-
 def test_lsh_topk_subset_of_brute(spark, sf_dir):
     """ANN results must be a subset of the corpus with valid cosines (sanity,
     not recall — recall is tunable)."""

@@ -92,6 +92,35 @@ def test_cache_persist_reuse(spark):
         df.unpersist()
 
 
+def test_audit_persist_fifo_holds_distinct_plans(spark, monkeypatch):
+    """audit_persist keeps the ``cap`` most recently persisted DISTINCT
+    plans. A repeat of a plan (built anew but semantically equal — what
+    the load_table memo makes of a repeated audited query) shares the
+    first one's CacheManager entry, so it must move to the newest slot
+    rather than take a second one: evicting the older duplicate would
+    unpersist the cache the repeat relies on. With cap 2, persisting A,
+    B, A' (same plan as A) and C leaves A' and C cached and B evicted."""
+    from pyspark import StorageLevel
+
+    from dask_hivemetastore_spark.plans import registry
+
+    monkeypatch.setattr(registry, "_AUDIT_PERSIST_CAP", 2)
+    monkeypatch.setattr(registry, "_AUDIT_PERSISTED", [])
+
+    def plan(n):
+        return spark.range(n).selectExpr("id * 2 AS x")
+
+    a, b, a2, c = [registry.audit_persist(plan(n)) for n in (5, 6, 5, 7)]
+    try:
+        assert a2.storageLevel != StorageLevel.NONE
+        assert c.storageLevel != StorageLevel.NONE
+        assert b.storageLevel == StorageLevel.NONE
+        assert len(registry._AUDIT_PERSISTED) == 2
+    finally:
+        for df in (a, b, a2, c):
+            df.unpersist()
+
+
 def test_sql_join_hints_respected(spark):
     """SQL hints steer the join strategy: BROADCAST forces a broadcast join
     even with broadcasting disabled; MERGE forces sort-merge even for a

@@ -3,7 +3,7 @@ r10 #7).
 
 Default ON is the driver contract — every registered oracle assumes the
 exact-twin verdict columns are real. OFF is the 100 TB serving path the
-A/B harness measures (scripts/ab_verify_overhead.py): the sketch plan
+A/B measured (PERF.md r12, "Derived-verdict overhead A/B"): the sketch plan
 runs WITHOUT its exact counterpart and the verdict columns emit NULL.
 Pinned here so neither arm can drift silently:
 
